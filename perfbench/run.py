@@ -30,7 +30,6 @@ import json
 import os
 import shutil
 import signal
-import subprocess
 import sys
 import threading
 
@@ -86,14 +85,27 @@ def _nproc() -> int:
 
 
 def _git_sha() -> str | None:
+    """HEAD's commit, read from ``.git`` in the checkout (None outside a
+    git checkout); no git process, nothing read outside the checkout."""
+    git = os.path.join(ROOT, ".git")
     try:
-        out = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True,
-            text=True, timeout=10,
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    return out.stdout.strip() if out.returncode == 0 else None
+        with open(os.path.join(git, "HEAD")) as f:
+            head = f.read().strip()
+        if not head.startswith("ref: "):
+            return head
+        ref = head[5:]
+        ref_path = os.path.join(git, ref)
+        if os.path.isfile(ref_path):
+            with open(ref_path) as f:
+                return f.read().strip()
+        with open(os.path.join(git, "packed-refs")) as f:
+            for line in f:
+                sha, _, name = line.strip().partition(" ")
+                if name == ref:
+                    return sha
+    except OSError:
+        pass
+    return None
 
 
 def main(argv=None) -> int:
