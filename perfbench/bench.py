@@ -7,9 +7,9 @@ says) and ``run_unit(tracer, warm)``, one closed-loop unit of work
 returning its per-operation samples ``{"s", "items"}``, the number of
 operations that failed their checks and its start and end time (the
 window whose SQL plans are fingerprinted). A unit is one build
-(``ontology_build``), one
-micro-batch (``ingest_loop``) or one replay of every file through the
-four streaming queries, one sample per trigger (``event_stream``).
+(``ontology_build``), one micro-batch (``ingest_loop``) or one replay
+of every file through the four streaming queries, one sample per file:
+the four queries' trigger seconds on it, summed (``event_stream``).
 """
 
 from __future__ import annotations
@@ -43,12 +43,10 @@ SIZES = {
     },
     "event_stream": {
         "full": dict(
-            n_events=100_000, n_files=6, n_users=2_000, dup_frac=0.02,
-            late_frac=0.05, max_late_s=900,
+            days=1, n_files=2, dup_frac=0.02, late_frac=0.05, max_late_s=900,
         ),
         "small": dict(
-            n_events=5_000, n_files=4, n_users=200, dup_frac=0.02,
-            late_frac=0.05, max_late_s=900,
+            days=1, n_files=2, dup_frac=0.02, late_frac=0.05, max_late_s=900,
         ),
     },
 }
@@ -150,7 +148,6 @@ def _run(args, spark, work, records, record, session_s, jvm_pid) -> dict:
         warmup_s = time.perf_counter() - t
         attempted, failed = warm["ops"], warm["failed"]
         failures += warm["failures"]
-        wl.after_warmup()
     setup_s = session_s + prepare_s + warmup_s
 
     # ---- timed loop ----
@@ -183,9 +180,7 @@ def _run(args, spark, work, records, record, session_s, jvm_pid) -> dict:
         warmup_s=warmup_s,
         failures=failures[:50],
         plan_fingerprints=fingerprints,
-        units=[
-            {k: v for k, v in u.items() if k != "samples"} for u in units
-        ],
+        units=units,
         inputs=wl.describe(),
     )
 
@@ -248,7 +243,7 @@ def repeat_counts(tracer, units, metrics) -> dict:
         "jobs_per_call": jobs,
         "accepted_per_batch": [u["accepted"] for u in units if "accepted" in u],
         "input_rows_per_trigger": [
-            s["input_rows"] for u in units for s in u["samples"] if "input_rows" in s
+            t["input_rows"] for u in units for t in u.get("triggers", ())
         ],
         "store_files": {
             k: v["value"] for k, v in metrics.items() if k.endswith("store_files")

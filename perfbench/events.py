@@ -1,6 +1,7 @@
 """``event_stream``: four streaming queries replayed over event files.
 
-The generated event files sit in one source directory with increasing
+The event files (a seeded slice of the ``events`` table, see
+``gen.event_inputs``) sit in one source directory with increasing
 modification times. A pass runs each of the four queries from a fresh
 checkpoint with ``maxFilesPerTrigger=1`` and an ``availableNow``
 trigger, so every file is one trigger:
@@ -74,18 +75,18 @@ def _query_frame(name: str, events):
 
 class EventStream:
     name = "event_stream"
-    op_name = "trigger"
+    op_name = "file"
     item = "events"
     warm_up = True
     min_units = 1
 
-    def __init__(self, spark, work, n_events, n_files, n_users, dup_frac,
-                 late_frac, max_late_s):
+    def __init__(self, spark, work, days, n_files, dup_frac, late_frac,
+                 max_late_s):
         self.spark = spark
         self.work = work
         self.params = dict(
-            n_events=n_events, n_files=n_files, n_users=n_users,
-            dup_frac=dup_frac, late_frac=late_frac, max_late_s=max_late_s,
+            days=days, n_files=n_files, dup_frac=dup_frac,
+            late_frac=late_frac, max_late_s=max_late_s,
         )
         self.src = os.path.join(work, "inputs", "events")
         self.n_pass = 0
@@ -98,36 +99,35 @@ class EventStream:
         for k, path in enumerate(self.inputs["files"]):
             os.utime(path, (base + k, base + k))
         static = self.spark.read.schema(EVENT_SCHEMA).parquet(self.src)
-        self.file_rows = [
-            self.spark.read.schema(EVENT_SCHEMA).parquet(p).count()
-            for p in self.inputs["files"]
-        ]
+        self.file_rows = self.inputs["file_rows"]
         self.twins = _batch_twins(static)
 
     def describe(self) -> dict:
-        return {
-            k: v for k, v in self.inputs.items() if k != "files"
-        } | {"file_rows": self.file_rows}
-
-    def after_warmup(self) -> None:
-        pass
+        return {k: v for k, v in self.inputs.items() if k != "files"}
 
     def run_unit(self, tr, warm: bool, keep: bool = False, again: bool = False) -> dict:
         """One replay of every file through the four queries; the warm-up
-        replay collects the emissions and checks them."""
+        replay collects the emissions and checks them. One sample per
+        file: the four queries' trigger seconds on that file, summed (the
+        time a newly arrived file takes through the streaming layer)."""
         t_start = time.time()
         r = self.run_pass(tr, collect=warm)
         t_end = time.time()
-        for s in r["samples"]:
-            s["unit"] = self.n_pass
-            s["items"] = s["input_rows"]
+        triggers = r["triggers"]
+        for t in triggers:
+            t["unit"] = self.n_pass
+        samples = [
+            {"s": sum(t["s"] for t in triggers if t["file"] == k), "items": rows}
+            for k, rows in enumerate(self.file_rows)
+        ]
         return {
             "wall": r["wall"],
             "t_start": t_start,
             "t_end": t_end,
-            "samples": r["samples"],
-            "ops": len(r["samples"]),
-            "failed": len(r["samples"]) if r["failures"] else 0,
+            "samples": samples,
+            "triggers": triggers,
+            "ops": len(triggers),
+            "failed": len(triggers) if r["failures"] else 0,
             "failures": r["failures"],
         }
 
@@ -155,10 +155,12 @@ class EventStream:
         return [p for p in q.recentProgress if "triggerExecution" in p.durationMs]
 
     def run_pass(self, tr, collect: bool = False) -> dict:
-        """Replay all files through the four queries. Returns per-trigger
-        samples and, with ``collect``, every emitted row per query."""
+        """Replay all files through the four queries. Returns one record
+        per trigger (``file`` is the index of the file it read, None for
+        a trigger that read none) and, with ``collect``, every emitted
+        row per query."""
         self.n_pass += 1
-        samples, emitted, failures = [], {}, []
+        triggers, emitted, failures = [], {}, []
         t0 = time.perf_counter()
         for layer, name, mode in QUERIES:
             if collect:
@@ -176,12 +178,14 @@ class EventStream:
                     f"{name}: input rows per trigger "
                     f"{[p.numInputRows for p in data]} != files {self.file_rows}"
                 )
+            files = iter(range(len(data)))
             for p in progress:
-                samples.append(_sample(layer, name, p))
+                file = next(files) if p.numInputRows > 0 else None
+                triggers.append(_trigger(layer, name, p, file))
         wall = time.perf_counter() - t0
         if collect:
             failures += self._check(emitted)
-        return {"wall": wall, "samples": samples, "failures": failures}
+        return {"wall": wall, "triggers": triggers, "failures": failures}
 
     def _check(self, emitted) -> list[str]:
         bad = []
@@ -207,12 +211,13 @@ class EventStream:
         return bad
 
 
-def _sample(layer, name, p) -> dict:
+def _trigger(layer, name, p, file) -> dict:
     d = p.durationMs
     st = p.stateOperators[0] if p.stateOperators else None
     return {
         "layer": layer,
         "query": name,
+        "file": file,
         "s": d["triggerExecution"] / 1000.0,
         "add_batch_ms": d.get("addBatch", 0),
         "query_planning_ms": d.get("queryPlanning", 0),

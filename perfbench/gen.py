@@ -9,21 +9,22 @@ files written here, in the reference's formats:
   ``WORKSHEET_METADATA`` entry, columns at the sheet's ordinals), the
   concept-id mapping table as JSONL and the enrichment service's
   responses as a JSON snapshot.
-* ``ingest_loop`` — a reference corpus (parquet) that the stores are
-  built from, and ``n_batches`` micro-batch files. Each batch mixes
-  fresh documents with edited re-sends of corpus documents and of
-  earlier batches' documents.
-* ``event_stream`` — an event table cut by event time into ``n_files``
-  parquet files, with duplicate re-deliveries and out-of-order events
-  that stay within the watermark.
+* ``ingest_loop`` — a seeded split of the ``documents`` table: a
+  reference corpus (parquet) that the stores are built from, and
+  ``n_batches`` micro-batch files. Each batch mixes held-out documents
+  with edited re-sends of corpus documents and of earlier batches'
+  documents.
+* ``event_stream`` — a seeded time slice of the ``events`` table cut by
+  event time into ``n_files`` parquet files, with duplicate
+  re-deliveries and out-of-order events that stay within the watermark.
 
-Documents are 60-120 pseudo-words drawn from two of 8 fixed topics
-plus English stopwords (so language-ID tags them ``en``).
+Both tables are copies of the sf0.1 test data (``data/documents.parquet``:
+5,000 documents of 10-100 words; ``data/events.parquet``: 100,000
+events over 30 days from 1,500 users).
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import random
@@ -32,30 +33,6 @@ from ontology_graph_etl_spark import fixtures
 from ontology_graph_etl_spark.sources.tabular import WORKSHEET_METADATA
 from ontology_graph_etl_spark.sources.xlsx import write_xlsx
 
-STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
-N_TOPICS = 8
-TOPIC_WORDS = 10
-
-
-def _vocabulary() -> list[list[str]]:
-    """A fixed vocabulary of ``N_TOPICS`` topics of pseudo-words (the
-    same for every seed): documents mix two topics, so two fresh
-    documents share vocabulary but rarely a word 3-shingle."""
-    rng = random.Random(20240101)
-    syllables = [c + v for c in "bcdfgklmnprstvz" for v in "aeiou"]
-    words: set[str] = set()
-    while len(words) < N_TOPICS * TOPIC_WORDS:
-        words.add("".join(rng.choice(syllables) for _ in range(rng.randint(2, 4))))
-    ordered = sorted(words)
-    rng.shuffle(ordered)
-    return [
-        ordered[t * TOPIC_WORDS:(t + 1) * TOPIC_WORDS] for t in range(N_TOPICS)
-    ]
-
-
-TOPICS = _vocabulary()
-ALL_WORDS = [w for t in TOPICS for w in t]
-LANGS = ("en", "en", "en", "en", "de", "fr", "zh", "und")
 PROPERTY_DETAILS = ("rest", "obs", "hist")
 
 
@@ -176,37 +153,18 @@ def ontology_inputs(
 # ingest_loop
 # --------------------------------------------------------------------------
 
-
-def _text(rng: random.Random) -> str:
-    """60-120 tokens: stopwords, two topics' words and a little noise."""
-    a, b = rng.sample(TOPICS, 2)
-    out = []
-    for _ in range(rng.randint(60, 120)):
-        u = rng.random()
-        pool = (
-            STOPWORDS if u < 0.2 else a if u < 0.65 else b if u < 0.95 else ALL_WORDS
-        )
-        out.append(rng.choice(pool))
-    return " ".join(out)
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+DOCUMENTS = os.path.join(DATA, "documents.parquet")
+EVENTS = os.path.join(DATA, "events.parquet")
+#: first id of the batch documents (the table's own ids are below 5,000)
+BATCH_ID0 = 1_000_000
 
 
 def _edit(rng: random.Random, text: str) -> str:
-    """A light re-send edit: change one word, so the copy stays a
-    near-duplicate (word 3-shingle Jaccard well above 0.5)."""
-    words = text.split()
-    i = rng.randrange(len(words))
-    words[i] = rng.choice(ALL_WORDS)
-    return " ".join(words)
-
-
-def _doc(doc_id: int, text: str, rng: random.Random) -> dict:
-    return {
-        "doc_id": doc_id,
-        "text": text,
-        "lang": rng.choice(LANGS),
-        "source": f"src{rng.randrange(8)}",
-        "n_chars": len(text),
-    }
+    """A light re-send edit: one word of the text appended, so the copy
+    keeps ``n`` of its ``n + 1`` word 3-shingles (Jaccard >= 8/9 for
+    the table's shortest, 10-word documents)."""
+    return f"{text} {rng.choice(text.split())}"
 
 
 def ingest_inputs(
@@ -220,25 +178,27 @@ def ingest_inputs(
 ) -> dict:
     """Write the reference corpus and the micro-batch files.
 
-    Fresh documents (60-120 words over two of 8 topics) almost never
-    share a quarter of their word 3-shingles, so they pass the near-dup
-    screen; re-sends are one-word edits of an earlier document and must
-    be flagged. ``resends`` maps every
-    re-sent doc id to the id it copies, so the benchmark can check the
-    verdicts."""
+    The seed shuffles the ``documents`` table: the first ``n_corpus``
+    documents are the corpus, and the batches draw their fresh
+    documents, in order, from the rest. A share of each batch re-sends
+    an edited copy of a corpus document or of an earlier batch's fresh
+    document, which must be flagged near-duplicate. Batch documents get
+    new ids from ``BATCH_ID0`` on; ``resends`` maps every re-sent doc id
+    to the id it copies, so the benchmark can check the verdicts."""
     import pandas as pd
 
     rng = random.Random(seed * 104729 + 3)
     os.makedirs(out_dir, exist_ok=True)
-    corpus = [
-        _doc(i, _text(rng), rng) for i in range(n_corpus)
-    ]
+    docs = pd.read_parquet(DOCUMENTS).sort_values("doc_id").to_dict("records")
+    rng.shuffle(docs)
+    corpus = sorted(docs[:n_corpus], key=lambda d: d["doc_id"])
+    held_out = iter(docs[n_corpus:])
     corpus_path = os.path.join(out_dir, "corpus.parquet")
     pd.DataFrame(corpus).to_parquet(corpus_path, index=False)
 
     batch_paths, resends = [], {}
     sent: list[dict] = []  # earlier batches' fresh docs
-    next_id = 1_000_000
+    next_id = BATCH_ID0
     for b in range(n_batches):
         docs = []
         for _ in range(batch_size):
@@ -249,13 +209,11 @@ def ingest_inputs(
                 src = rng.choice(sent)
             else:
                 src = None
-            text = (
-                _edit(rng, src["text"])
-                if src is not None
-                else _text(rng)
-            )
-            d = _doc(next_id, text, rng)
-            if src is not None:
+            if src is None:
+                d = dict(next(held_out), doc_id=next_id)
+            else:
+                text = _edit(rng, src["text"])
+                d = dict(src, doc_id=next_id, text=text, n_chars=len(text))
                 resends[next_id] = src["doc_id"]
             docs.append(d)
             next_id += 1
@@ -265,6 +223,7 @@ def ingest_inputs(
         batch_paths.append(path)
     return {
         "corpus": corpus_path,
+        "corpus_ids": [d["doc_id"] for d in corpus],
         "batches": batch_paths,
         "resends": resends,
         "n_corpus": n_corpus,
@@ -275,57 +234,46 @@ def ingest_inputs(
 # event_stream
 # --------------------------------------------------------------------------
 
-EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
-
 
 def event_inputs(
     out_dir: str,
     seed: int,
-    n_events: int,
+    days: int,
     n_files: int,
-    n_users: int,
     dup_frac: float,
     late_frac: float,
     max_late_s: int,
 ) -> dict:
-    """Write the event stream as ``n_files`` parquet files cut by event
-    time. ``dup_frac`` of events are re-delivered (same event id and
-    timestamp) in the same or the next file; ``late_frac`` arrive in
-    the file after their own, at most ``max_late_s`` behind the
-    previous file's newest event — inside the watermark, so no window
-    drops them."""
+    """Write a seeded ``days``-day slice of the ``events`` table as
+    ``n_files`` parquet files cut by event time. ``dup_frac`` of events
+    are re-delivered (same event id and timestamp) in the same or the
+    next file; ``late_frac`` arrive in the file after their own, at most
+    ``max_late_s`` behind the previous file's newest event -- inside the
+    watermark, so no window drops them."""
     import pandas as pd
 
     rng = random.Random(seed * 15485863 + 5)
     os.makedirs(out_dir, exist_ok=True)
-    t0 = dt.datetime(2024, 1, 1)
-    span_s = 86_400
-    base = []
-    for i in range(n_events):
-        base.append(
-            {
-                "event_id": i,
-                "ts": t0 + dt.timedelta(
-                    seconds=rng.random() * span_s
-                ),
-                "user_id": rng.randrange(n_users),
-                "event_type": rng.choice(EVENT_TYPES),
-                "value": round(rng.random() * 200, 2),
-                "props": json.dumps({"k": rng.randrange(100)}),
-            }
-        )
-    base.sort(key=lambda e: (e["ts"], e["event_id"]))
-    width = span_s / n_files
+    table = pd.read_parquet(EVENTS)
+    day0 = table["ts"].min().normalize()
+    n_days = (table["ts"].max().normalize() - day0).days + 1
+    t0 = day0 + pd.Timedelta(days=rng.randrange(n_days - days + 1))
+    t1 = t0 + pd.Timedelta(days=days)
+    base = (
+        table[(table["ts"] >= t0) & (table["ts"] < t1)]
+        .sort_values(["ts", "event_id"])
+        .to_dict("records")
+    )
+    width = pd.Timedelta(days=days) / n_files
     files: list[list[dict]] = [[] for _ in range(n_files)]
     n_late = n_dup = 0
     for e in base:
-        k = min(n_files - 1, int((e["ts"] - t0).total_seconds() // width))
+        k = min(n_files - 1, int((e["ts"] - t0) // width))
         # only events within max_late_s of their file's end may slip
         # into the next file, so every slip stays inside the watermark
         can_slip = (
             k + 1 < n_files
-            and (t0 + dt.timedelta(seconds=(k + 1) * width) - e["ts"])
-            .total_seconds() <= max_late_s
+            and (t0 + (k + 1) * width - e["ts"]).total_seconds() <= max_late_s
         )
         late = can_slip and rng.random() < late_frac
         files[k + 1 if late else k].append(e)
@@ -338,13 +286,15 @@ def event_inputs(
     for k, rows in enumerate(files):
         rng.shuffle(rows)
         path = os.path.join(out_dir, f"events_{k:03d}.parquet")
-        pd.DataFrame(rows).astype({"ts": "datetime64[us]"}).to_parquet(
-            path, index=False
-        )
+        pd.DataFrame(rows, columns=list(table.columns)).astype(
+            {"ts": "datetime64[us]"}
+        ).to_parquet(path, index=False)
         paths.append(path)
     return {
         "files": paths,
-        "n_events": n_events,
+        "start": str(t0),
+        "n_events": len(base),
+        "file_rows": [len(f) for f in files],
         "n_delivered": sum(len(f) for f in files),
         "n_dup": n_dup,
         "n_late": n_late,

@@ -27,7 +27,7 @@ UNITS = {
 
 #: (span key, counters reported for it)
 CALLS = (
-    ("io.read_jsonl", ("s", "rows")),
+    ("io.read_jsonl", ("s", "jobs", "rows")),
     ("sources.xlsx.read_sheet_rows", ("s",)),
     ("sources.tabular.extract_relationships", ("s", "jobs", "rows")),
     ("pipelines.build_concept_graph", ("s", "jobs", "tasks", "shuffle_bytes")),
@@ -87,6 +87,7 @@ def metric_names() -> list[tuple[str, str]]:
         out += [(f"{layer}.store_files", "count"), (f"{layer}.store_bytes", "B")]
     for layer in STREAM_LAYERS:
         out += [(f"{layer}.{name}", unit) for name, unit, _, _ in STREAM_FIELDS]
+        out.append((f"{layer}.jobs", "count"))
     return out
 
 
@@ -120,10 +121,10 @@ def per_layer(wl, tracer, traced_units, session_s, overhead, cores) -> dict:
     def in_unit(sp, w):
         return w[0] <= sp.start and sp.end <= w[1]
 
-    def per_unit(key, field):
+    def per_unit(key, field, match=lambda sp, key: sp.key == key):
         out = []
         for w in windows:
-            spans = [sp for sp in tracer.spans if sp.key == key and in_unit(sp, w)]
+            spans = [sp for sp in tracer.spans if match(sp, key) and in_unit(sp, w)]
             if not spans:
                 continue
             if field == "s":
@@ -162,7 +163,7 @@ def per_layer(wl, tracer, traced_units, session_s, overhead, cores) -> dict:
                 per_unit("pipelines.ingest_micro_batch", f"{store}.bytes")
             )
 
-    samples = [s for u in traced_units for s in u.get("samples", ()) if "layer" in s]
+    samples = [s for u in traced_units for s in u.get("triggers", ())]
     for layer in STREAM_LAYERS:
         mine = [s for s in samples if s["layer"] == layer]
         if not mine:
@@ -180,5 +181,9 @@ def per_layer(wl, tracer, traced_units, session_s, overhead, cores) -> dict:
                     last[(s["unit"], s["query"])] = s[field]
                 v = sum(last.values()) / n_units
             values[f"{layer}.{name}"] = v
+        # every query of the layer: its spans' jobs per traced unit
+        values[f"{layer}.jobs"] = _med(
+            per_unit(layer, "jobs", match=lambda sp, layer: sp.layer == layer)
+        )
     units = dict(metric_names())
     return {k: {"value": v, "unit": units[k]} for k, v in values.items()}

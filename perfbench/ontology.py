@@ -79,17 +79,17 @@ class OntologyBuild:
     def describe(self) -> dict:
         return {"counts": self.inputs["counts"], "digests": self.digests}
 
-    def after_warmup(self) -> None:
-        pass
-
     def run_unit(self, tr, warm: bool, keep: bool = False, again: bool = False) -> dict:
-        """One build and its checks: structural checks on the saved
-        store, digests equal on every pass and, where pinned, equal to
-        the pinned digests of this seed."""
+        """One build and its checks: digests equal on every pass and,
+        where pinned, equal to the pinned digests of this seed; structural
+        checks on the saved store of the timed build. A traced run's
+        warm-up and untraced builds skip the structural checks (their
+        digests equal the traced build's), which keeps its three builds
+        well within the run's time limit."""
         t_start = time.time()
         r = self.run_pass(tr)
         t_end = time.time()
-        bad = self.check(r)
+        bad = [] if warm or keep else self.check(r)
         if self.digests is None:
             self.digests = r["digests"]
             if self.pins is not None and self.pins != self.digests:
