@@ -661,14 +661,6 @@ _DEDUP_INDEX_SIDECAR = "_dedup_index_params.json"
 DEDUP_INDEX_PARAM_KEYS = ("num_hashes", "bands", "shingle_n", "base_hash")
 
 
-def _hadoop_path_and_fs(spark, path: str):
-    """Back-compat alias of :func:`util.hadoop_path_and_fs` (the shared
-    stored-artifact plumbing since round 11)."""
-    from .util import hadoop_path_and_fs
-
-    return hadoop_path_and_fs(spark, path)
-
-
 def _read_sidecar(spark, path: str) -> dict:
     from .util import read_json_sidecar
 

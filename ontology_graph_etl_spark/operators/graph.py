@@ -10,10 +10,47 @@ GraphFrames dependency (SURVEY.md §7: avoided entirely).
 
 from __future__ import annotations
 
+import itertools
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .upsert import first_wins
+
+
+def _fixpoint(
+    step, advance, state, max_iterations, on_cap=None, changed="true"
+):
+    """The one convergence loop behind every graph iterative that runs
+    to a fixpoint (the GraphX join + group-by iteration, as DataFrames).
+
+    Each round ``step(state)`` builds the round's delta lazily. The
+    loop pins it with ``localCheckpoint`` (the lineage cut) and runs
+    the round's single convergence action on the pinned copy:
+    ``isEmpty()`` over its rows matching ``changed``, a SQL predicate
+    (every row by default; a caller whose pinned frame is the whole
+    rewritten state names its change-flag column). No such row is the
+    fixpoint: ``state`` comes back as it stands. Otherwise the loop
+    goes on from ``advance(state, delta)``, given the pinned delta.
+
+    ``max_iterations=None`` runs until the fixpoint. After
+    ``max_iterations`` rounds without one, ``on_cap`` is the caller's
+    documented cap policy: a ``Warning`` instance is warned and the
+    truncated state returned, any other exception is raised, and
+    ``None`` returns the state as it stands (best effort).
+    """
+    for _ in itertools.islice(itertools.count(), max_iterations):
+        delta = step(state).localCheckpoint()
+        if delta.where(changed).isEmpty():
+            return state
+        state = advance(state, delta)
+    if isinstance(on_cap, Warning):
+        # stacklevel 3: the warning points at the operator's caller
+        warnings.warn(on_cap, stacklevel=3)
+    elif on_cap is not None:
+        raise on_cap
+    return state
 
 
 def build_nodes(
@@ -172,95 +209,33 @@ def closure(
         .localCheckpoint()
     )
     small_base = base.count() <= _CLOSURE_BROADCAST_EDGES
-    acc = base
-    frontier = base
     hops = base.select(F.col("node").alias("anc"), F.col("anc").alias("anc2"))
     if small_base:
         hops = F.broadcast(hops)
-    converged = False
-    for _ in range(max_iterations):
+
+    def extend(s):
         # frontier ⋈ base: extend each known pair by one hop; dedup AFTER
         # the anti join (smaller input to the distinct shuffle)
+        acc, frontier = s
         extended = frontier.join(hops, "anc").select(
             "node", F.col("anc2").alias("anc")
         )
-        new_pairs = (
-            extended.join(acc, ["node", "anc"], "left_anti")
-            .distinct()
-            .localCheckpoint()
-        )
-        if new_pairs.isEmpty():
-            converged = True
-            break
-        # acc is a union of already-checkpointed frontiers — unioning is
-        # free; re-checkpointing it each round would materialize the whole
-        # closure O(depth) times
-        acc = acc.union(new_pairs)
-        frontier = new_pairs
-    if not converged:
-        # never cap silently: a truncated closure looks complete but isn't
-        import warnings
+        return extended.join(acc, ["node", "anc"], "left_anti").distinct()
 
-        warnings.warn(
+    # acc is a union of already-checkpointed frontiers — unioning is
+    # free; re-checkpointing it each round would materialize the whole
+    # closure O(depth) times. Never cap silently: a truncated closure
+    # looks complete but isn't.
+    acc, _ = _fixpoint(
+        extend,
+        lambda s, new: (s[0].union(new), new),
+        (base, base),
+        max_iterations,
+        UserWarning(
             f"closure did not reach fixpoint within {max_iterations} "
-            "iterations; result is truncated at that depth",
-            stacklevel=2,
-        )
-    return acc
-
-
-def closure_doubling(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """G5 via path doubling: R_{k+1} = R_k ∪ (R_k ∘ R_k), reaching paths
-    of length 2^k after k rounds — ⌈log2(depth)⌉ iterations instead of
-    the semi-naive loop's ``depth``.
-
-    Strategy tradeoff vs :func:`closure` (property-tested equivalent):
-    doubling self-joins and dedups the FULL closure-so-far each round
-    (2 shuffles/round over O(closure) rows), semi-naive touches only the
-    frontier (3 shuffles/round over O(frontier) rows). Measured at
-    sf0.1 on the depth-6 div-10 part hierarchy, semi-naive wins (1.4s
-    vs 1.6s warm): its frontier shrinks 10x per round, so doubling's
-    fewer rounds don't pay for re-shuffling the whole closure. Doubling
-    only wins when depth is large RELATIVE to closure growth (long thin
-    chains). Fixpoint detection compares pair counts (monotone — no
-    anti-join needed).
-    """
-    acc = (
-        edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("anc"))
-        .distinct()
-        .localCheckpoint()
+            "iterations; result is truncated at that depth"
+        ),
     )
-    n = acc.count()
-    converged = False
-    for _ in range(max_iterations):
-        hop = acc.select(F.col("node").alias("anc"), F.col("anc").alias("anc2"))
-        doubled = (
-            acc.unionByName(
-                acc.join(hop, "anc").select(
-                    "node", F.col("anc2").alias("anc")
-                )
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        m = doubled.count()
-        if m == n:
-            converged = True
-            break
-        acc, n = doubled, m
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"closure_doubling did not reach fixpoint within "
-            f"{max_iterations} iterations; result is truncated",
-            stacklevel=2,
-        )
     return acc
 
 
@@ -423,7 +398,8 @@ def _min_label_propagation(
         .select(F.col("a").alias("id"), F.col("a").alias("comp"))
         .localCheckpoint()
     )
-    for _ in range(max_iterations):
+
+    def relabel(lab):
         cand = e.join(lab, e["b"] == lab["id"]).select(
             e["a"].alias("id"), lab["comp"].alias("comp")
         )
@@ -437,24 +413,21 @@ def _min_label_propagation(
         ptr = merged.select(
             F.col("id").alias("jid"), F.col("comp").alias("jcomp")
         )
-        jumped = (
-            merged.join(ptr, merged["comp"] == ptr["jid"], "left")
-            .select(
-                merged["id"],
-                F.coalesce(ptr["jcomp"], merged["comp"]).alias("comp"),
-            )
-            .localCheckpoint()
+        jumped = merged.join(ptr, merged["comp"] == ptr["jid"], "left").select(
+            merged["id"],
+            F.coalesce(ptr["jcomp"], merged["comp"]).alias("comp"),
         )
-        converged = (
-            jumped.join(
-                lab.withColumnRenamed("comp", "__old"), "id"
-            )
-            .where(F.col("comp") != F.col("__old"))
-            .isEmpty()
+        return jumped.join(lab.withColumnRenamed("comp", "__old"), "id").select(
+            "id", "comp", (F.col("comp") != F.col("__old")).alias("__moved")
         )
-        lab = jumped
-        if converged:
-            break
+
+    lab = _fixpoint(
+        relabel,
+        lambda _, moved: moved.select("id", "comp"),
+        lab,
+        max_iterations,
+        changed="__moved",
+    )
     return lab.select("id", F.col("comp").alias("component"))
 
 
@@ -489,32 +462,28 @@ def shortest_paths(
         .withColumn("dist", F.lit(0).cast("int"))
         .localCheckpoint()
     )
-    frontier = dist
-    converged = False
-    for _ in range(max_iterations):
+
+    def expand(s):
+        dist, frontier = s
         expanded = (
             frontier.join(e, frontier.id == e.src)
             .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
         )
-        new_frontier = (
-            expanded.join(dist.select("id"), "id", "left_anti").localCheckpoint()
-        )
-        if new_frontier.isEmpty():
-            converged = True
-            break
-        dist = dist.union(new_frontier)
-        frontier = new_frontier
-    if not converged:
-        import warnings
+        return expanded.join(dist.select("id"), "id", "left_anti")
 
-        warnings.warn(
+    dist, _ = _fixpoint(
+        expand,
+        lambda s, new: (s[0].union(new), new),
+        (dist, dist),
+        max_iterations,
+        UserWarning(
             f"shortest_paths did not exhaust the graph within "
             f"{max_iterations} iterations; distances beyond that depth "
-            "are missing",
-            stacklevel=2,
-        )
+            "are missing"
+        ),
+    )
     return dist
 
 
@@ -605,9 +574,9 @@ def weighted_shortest_paths(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint()
     )
-    frontier = dist
-    converged = False
-    for _ in range(max_iterations):
+
+    def relax(s):
+        dist, frontier = s
         cand = (
             frontier.join(e, frontier.id == e.src)
             .select(
@@ -617,37 +586,34 @@ def weighted_shortest_paths(
             .groupBy("id")
             .agg(F.min("d").alias("d"))
         )
-        improved = (
+        return (
             cand.join(dist, "id", "left")
             .where(F.col("dist").isNull() | (F.col("d") < F.col("dist")))
             .select("id", F.col("d").alias("dist"))
-            .localCheckpoint()
         )
-        if improved.isEmpty():
-            converged = True
-            break
+
+    def merge(s, improved):
         dist = (
-            dist.join(improved.select("id"), "id", "left_anti")
+            s[0].join(improved.select("id"), "id", "left_anti")
             .union(improved)
             .localCheckpoint()
         )
-        frontier = improved
-    if not converged:
-        if guard_cycles:
-            raise ValueError(
-                "weighted_shortest_paths: distances still improving "
-                f"after {max_iterations} rounds (> node count) — a "
-                "negative cycle is reachable from the sources; no "
-                "shortest paths exist"
-            )
-        import warnings
+        return dist, improved
 
-        warnings.warn(
+    if guard_cycles:
+        on_cap = ValueError(
+            "weighted_shortest_paths: distances still improving "
+            f"after {max_iterations} rounds (> node count) — a "
+            "negative cycle is reachable from the sources; no "
+            "shortest paths exist"
+        )
+    else:
+        on_cap = UserWarning(
             f"weighted_shortest_paths did not converge within "
             f"{max_iterations} iterations; distances beyond that "
-            "depth may be missing or non-minimal",
-            stacklevel=2,
+            "depth may be missing or non-minimal"
         )
+    dist, _ = _fixpoint(relax, merge, (dist, dist), max_iterations, on_cap)
     return dist
 
 
@@ -1182,29 +1148,31 @@ def topo_depth(
     )
     if small_base:
         down = F.broadcast(down)
-    levels = [roots.select("node", F.lit(0).alias("d"))]
-    frontier = roots
-    converged = False
-    for t in range(1, max_iterations + 1):
-        frontier = (
-            frontier.join(down, "node")
+
+    def descend(s):
+        return (
+            s[1].join(down, "node")
             .select(F.col("child").alias("node"))
             .distinct()
-            .localCheckpoint()
         )
-        if frontier.isEmpty():
-            converged = True
-            break
-        levels.append(frontier.select("node", F.lit(t).alias("d")))
-    if not converged:
-        import warnings
 
-        warnings.warn(
+    def deepen(s, frontier):
+        # the t-th frontier: nodes with SOME root path of length t
+        levels, _ = s
+        t = len(levels)
+        return levels + [frontier.select("node", F.lit(t).alias("d"))], frontier
+
+    levels, _ = _fixpoint(
+        descend,
+        deepen,
+        ([roots.select("node", F.lit(0).alias("d"))], roots),
+        max_iterations,
+        UserWarning(
             f"topo_depth did not drain its frontier within "
             f"{max_iterations} iterations (cyclic input?); levels are "
-            "truncated at that depth",
-            stacklevel=2,
-        )
+            "truncated at that depth"
+        ),
+    )
     acc = levels[0]
     for piece in levels[1:]:
         acc = acc.union(piece)
@@ -1250,12 +1218,16 @@ def kcore(
     at 100 TB the cost is bounded by O(rounds) scans of a
     monotonically shrinking, never re-shuffled edge list; past the
     broadcast gate the survivor joins degrade to shuffle joins
-    gracefully. ``localCheckpoint`` truncates lineage each round (the
-    edge frame feeds BOTH the degree aggregate and the next round's
-    semi joins — an unchecked fork would re-execute the whole peel
-    chain per consumer, the round-5 fork-without-reuse class; on a
-    real cluster swap in ``checkpoint()`` against the job's
-    checkpoint dir so the truncation survives executor loss).
+    gracefully. To a fixpoint (``rounds=None``) the two semi joins
+    become two flagging left joins, so the round's pinned edge frame
+    marks the edges it cuts and the round's one action is the emptiness
+    test of that flag (no edge count per round). ``localCheckpoint``
+    truncates lineage each round (the edge frame feeds BOTH the degree
+    aggregate and the next round's joins — an unchecked fork would
+    re-execute the whole peel chain per consumer, the round-5
+    fork-without-reuse class; on a real cluster swap in
+    ``checkpoint()`` against the job's checkpoint dir so the
+    truncation survives executor loss).
     """
     from .util import broadcast_if_small
 
@@ -1272,32 +1244,56 @@ def kcore(
         .dropDuplicates(["a", "b"])
         .localCheckpoint()
     )
-    fixed = rounds is not None
-    n_rounds = rounds if fixed else max_iterations
-    converged = False
-    for _ in range(n_rounds):
-        keep = broadcast_if_small(
+
+    def survivors(sym):
+        return broadcast_if_small(
             sym.groupBy("a")
             .agg(F.count(F.lit(1)).alias("__deg"))
             .where(F.col("__deg") >= k)
             .select("a")
         )
-        nxt = (
-            sym.join(keep, "a", "semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "semi")
-            .localCheckpoint()
-        )
-        if not fixed and nxt.count() == sym.count():
-            converged = True
-            break
-        sym = nxt
-    if not fixed and not converged:
-        import warnings
 
-        warnings.warn(
-            f"kcore did not reach fixpoint within {max_iterations} "
-            "iterations; result is the truncated peel state",
-            stacklevel=2,
+    if rounds is not None:
+        for _ in range(rounds):
+            keep = survivors(sym)
+            sym = (
+                sym.join(keep, "a", "semi")
+                .join(keep.select(F.col("a").alias("b")), "b", "semi")
+                .localCheckpoint()
+            )
+    else:
+
+        def peel(sym):
+            # the edge frame with a flag on the edges this round cuts:
+            # the round's one action tests the pinned flag, and a round
+            # that cuts no edge leaves the k-core
+            keep = survivors(sym)
+            return (
+                sym.join(keep.withColumn("__ka", F.lit(True)), "a", "left")
+                .join(
+                    keep.select(F.col("a").alias("b"), F.lit(True).alias("__kb")),
+                    "b",
+                    "left",
+                )
+                .select(
+                    "a",
+                    "b",
+                    (F.col("__ka").isNull() | F.col("__kb").isNull()).alias(
+                        "__cut"
+                    ),
+                )
+            )
+
+        sym = _fixpoint(
+            peel,
+            lambda _, cut: cut.where(~F.col("__cut")).select("a", "b"),
+            sym,
+            max_iterations,
+            UserWarning(
+                f"kcore did not reach fixpoint within {max_iterations} "
+                "iterations; result is the truncated peel state"
+            ),
+            changed="__cut",
         )
     return sym.groupBy("a").agg(
         F.count(F.lit(1)).cast("long").alias("degree")
@@ -1506,10 +1502,19 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint()
     )
-    assigned: list[DataFrame] = []
-    e = e_all
+
+    def drop(e, gone):
+        """The edge frame without any edge touching a ``gone`` node."""
+        return (
+            e.join(gone.select(F.col("id").alias("src")), "src", "left_anti")
+            .join(gone.select(F.col("id").alias("dst")), "dst", "left_anti")
+            .select("src", "dst")
+            .localCheckpoint()
+        )
+
     # -- phase 1: trim tails (singletons by degree) ---------------------
-    for _ in range(max_trim_rounds):
+    def trim(s):
+        nodes, e, _ = s
         # self-loop nodes are cyclic by themselves: never trimmable
         loopers = e.where(F.col("src") == F.col("dst")).select(
             F.col("src").alias("id")
@@ -1522,27 +1527,26 @@ def strongly_connected_components(
         keep = (
             has_out.join(has_in, "id", "semi").union(loopers).distinct()
         )
-        trimmed = nodes.join(keep, "id", "left_anti").localCheckpoint()
-        if trimmed.isEmpty():
-            break
-        assigned.append(
-            trimmed.select("id", F.col("id").alias("scc_id"))
+        return nodes.join(keep, "id", "left_anti")
+
+    def assign_singletons(s, trimmed):
+        nodes, e, assigned = s
+        return (
+            nodes.join(trimmed, "id", "left_anti").localCheckpoint(),
+            drop(e, trimmed),
+            assigned + [trimmed.select("id", F.col("id").alias("scc_id"))],
         )
-        nodes = nodes.join(keep, "id", "semi").localCheckpoint()
-        e = (
-            e.join(nodes.select(F.col("id").alias("src")), "src", "semi")
-            .join(nodes.select(F.col("id").alias("dst")), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint()
-        )
+
+    # best effort: a cap hit leaves the remaining tails to coloring
+    state = _fixpoint(
+        trim, assign_singletons, (nodes, e_all, []), max_trim_rounds
+    )
+
     # -- phases 2+3: color, sweep, peel, repeat --------------------------
-    for _ in range(max_outer_rounds):
-        if nodes.isEmpty():
-            break
-        color = nodes.select("id", F.col("id").alias("color"))
-        delta = color
-        for i in range(max_color_rounds):
+    def color_of(nodes, e):
+        def spread(s):
             # propagate only last round's improvements (semi-naive)
+            color, delta = s
             cand = (
                 e.join(
                     delta.select(
@@ -1553,29 +1557,37 @@ def strongly_connected_components(
                 .groupBy("dst")
                 .agg(F.min("c").alias("c"))
             )
-            merged = (
-                color.join(
-                    cand.select(F.col("dst").alias("id"), "c"), "id", "left"
-                )
-                .select(
-                    "id",
-                    F.least(F.col("color"), F.coalesce("c", F.col("color"))).alias(
-                        "color"
-                    ),
-                    (F.col("c") < F.col("color")).alias("__improved"),
-                )
-                .localCheckpoint()
+            return color.join(
+                cand.select(F.col("dst").alias("id"), "c"), "id", "left"
+            ).select(
+                "id",
+                F.least(F.col("color"), F.coalesce("c", F.col("color"))).alias(
+                    "color"
+                ),
+                (F.col("c") < F.col("color")).alias("__improved"),
             )
-            delta = merged.where(F.col("__improved")).select("id", "color")
-            color = merged.select("id", "color")
-            if delta.isEmpty():
-                break
-        else:
-            raise RuntimeError(
+
+        color = nodes.select("id", F.col("id").alias("color"))
+        color, _ = _fixpoint(
+            spread,
+            lambda _, m: (
+                m.select("id", "color"),
+                m.where(F.col("__improved")).select("id", "color"),
+            ),
+            (color, color),
+            max_color_rounds,
+            RuntimeError(
                 f"scc coloring did not reach fixpoint within "
                 f"{max_color_rounds} rounds; raise max_color_rounds "
                 f"(rounds scale with graph diameter)"
-            )
+            ),
+            changed="__improved",
+        )
+        return color
+
+    def resolve(s, nodes):
+        _, e, assigned = s
+        color = color_of(nodes, e)
         # intra-class edges: both endpoints share a color
         ce = (
             e.join(
@@ -1590,12 +1602,9 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint()
         )
-        pivots = color.where(F.col("id") == F.col("color")).select(
-            "id", F.col("color").alias("scc_id")
-        )
-        reached = pivots.localCheckpoint()
-        frontier = reached
-        while not frontier.isEmpty():
+
+        def back(s):
+            reached, frontier = s
             step = (
                 ce.join(
                     frontier.select(F.col("id").alias("dst"), "scc_id"), "dst"
@@ -1603,22 +1612,37 @@ def strongly_connected_components(
                 .select(F.col("src").alias("id"), "scc_id")
                 .distinct()
             )
-            frontier = step.join(reached, "id", "left_anti").localCheckpoint()
-            if frontier.isEmpty():
-                break
-            reached = reached.union(frontier).localCheckpoint()
-        assigned.append(reached)
-        nodes = nodes.join(reached, "id", "left_anti").localCheckpoint()
-        e = (
-            e.join(nodes.select(F.col("id").alias("src")), "src", "semi")
-            .join(nodes.select(F.col("id").alias("dst")), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint()
+            return step.join(reached, "id", "left_anti")
+
+        pivots = color.where(F.col("id") == F.col("color")).select(
+            "id", F.col("color").alias("scc_id")
+        ).localCheckpoint()
+        reached, _ = _fixpoint(
+            back,
+            lambda s, fr: (s[0].union(fr).localCheckpoint(), fr),
+            (pivots, pivots),
+            None,
         )
-    if not nodes.isEmpty():
-        raise RuntimeError(
+        # the next round's test pins the remaining node set
+        return (
+            nodes.join(reached, "id", "left_anti"),
+            drop(e, reached),
+            assigned + [reached],
+        )
+
+    # a round tests the node set the last one left BEFORE coloring it,
+    # so the test that follows the max_outer_rounds-th coloring is in
+    # round max_outer_rounds + 1 (a graph that still has nodes then is
+    # colored once more before the raise)
+    _, _, assigned = _fixpoint(
+        lambda s: s[0],
+        resolve,
+        state,
+        max_outer_rounds + 1,
+        RuntimeError(
             f"scc did not converge within {max_outer_rounds} outer rounds"
-        )
+        ),
+    )
     if not assigned:  # empty edge input: no endpoints, empty result
         return e_all.select(
             F.col("src").alias("id"), F.col("dst").alias("scc_id")

@@ -481,7 +481,7 @@ def semantic_join(
     SAME deterministic sign-bucket bands (no RNG, so one SQL engine
     re-derives both sides), candidates come from a LEFT×RIGHT equi
     join on ``(band, bucket)`` — shuffle linear in rows×bands, never
-    \|L\|·\|R\| — and the exact cosine verify touches bucket
+    |L|·|R| — and the exact cosine verify touches bucket
     collisions only, vectors joined back narrow-first. ``id_a`` is
     always the left id and ``id_b`` the right id (no ``<`` ordering —
     the sides are different tables); a pair is emitted once per

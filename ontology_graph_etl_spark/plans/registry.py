@@ -832,9 +832,9 @@ def _q32_closure(spark, sf_dir):
             "parent",
         )
     )
-    # semi-naive: measured faster than closure_doubling even on this
+    # semi-naive: measured faster than path doubling even on this
     # shallow hierarchy (frontier shrinks 10x per round; doubling
-    # re-shuffles the full closure each round — see its docstring)
+    # re-shuffles the full closure each round)
     return graph.closure(edges, "child", "parent")
 
 

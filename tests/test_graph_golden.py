@@ -881,3 +881,42 @@ def test_weighted_paths_agree_with_bfs_on_unit_weights(spark, sf_dir):
         ).collect()
     }
     assert wsp == bfs and len(bfs) > 0
+
+
+def _jobs_per_call(spark, fn):
+    """Spark jobs one call runs, counted through a job group and the
+    status tracker (after the listener bus has drained, so the last
+    job's start event is in)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-per-call-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixpoint_jobs_per_call_pinned(spark):
+    """The shared fixpoint loop runs one pin and one emptiness test
+    per round. Pin the jobs a whole call runs (the same at any core
+    count) for closure on a 6-edge chain (6 rounds) and for the k-core
+    fixpoint on K4 plus a 3-edge pendant chain (4 rounds), so an edit
+    that adds a per-round action fails here."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src: int, dst: int"
+    )
+    k4_tail = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)],
+        "src: int, dst: int",
+    )
+    assert _jobs_per_call(spark, lambda: graph.closure(chain)) == 39
+    assert _jobs_per_call(spark, lambda: graph.kcore(k4_tail, k=2)) == 34

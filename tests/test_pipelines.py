@@ -73,7 +73,21 @@ def test_enrich_concepts_mapping_and_audit(ont):
 
 
 def test_enrich_with_snapshot_transport(ont):
-    ids = [r.id for r in ont["concepts"].select("id").distinct().limit(20).collect()]
+    # three ids in a fixed order, each with a mapping row and of a
+    # semantic type the enrichment fetches (excluded ones never appear)
+    fetched = ont["concepts"].where(
+        F.col("semantic_type").isNull()
+        | (F.col("semantic_type") != "Cancer-Numeric-Modifier")
+    )
+    ids = [
+        r.id
+        for r in fetched.join(ont["mapping"], "id", "semi")
+        .select("id")
+        .distinct()
+        .orderBy("id")
+        .limit(3)
+        .collect()
+    ]
     snapshot = {
         ids[0]: ["Disease:rest", "Disease:obs", "Neoplasm:rest"],
         ids[1]: ["Response:rest"],
