@@ -207,27 +207,6 @@ def concept_property_types(
     return spark.createDataFrame(rows, PROPERTY_TYPES_SCHEMA)
 
 
-def property_type_events(
-    spark: SparkSession, concept_df: DataFrame, seed: int = 42
-) -> DataFrame:
-    """Raw un-deduped `"Type:detail"` strings (the HTTP response shape,
-    main.py:377-382) so split→prefix→set-dedup is testable from raw input."""
-    rng = random.Random(seed + 4)
-    ids = [r.id for r in concept_df.select("id").distinct().collect()]
-    rows = []
-    for cid in ids[: len(ids) // 2]:
-        for _ in range(rng.randint(1, 6)):
-            t = rng.choice(PROPERTY_TYPE_VOCAB)
-            rows.append((cid, f"{t}:{rng.choice(['rest', 'obs', 'hist'])}"))
-    return spark.createDataFrame(
-        rows,
-        StructType([
-            StructField("id", LongType(), False),
-            StructField("raw_type", StringType(), False),
-        ]),
-    )
-
-
 def concept_id_mapping(
     spark: SparkSession, concept_df: DataFrame, seed: int = 42
 ) -> DataFrame:

@@ -962,60 +962,6 @@ def simhash_expr(
     return hashed.select(F.col(id_col), fingerprint.alias(out_col))
 
 
-def hamming_distance(a, b):
-    """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    block_bits: int = 16,
-) -> DataFrame:
-    """SimHash near-dup: block on 16-bit prefixes (4 rotations) so that
-    any pair within Hamming distance 3 of a 64-bit hash collides in at
-    least one block (pigeonhole over 4 blocks), then verify distance.
-    The shuffle is on (block_idx, block_value) — never all-pairs.
-
-    Fingerprints are materialized before blocking: the simhash
-    expression is 64 folds wide, and project-collapse + the self-join
-    would otherwise recompute it 2 x 4 times (see lsh_candidate_pairs).
-    """
-    fp = simhash(df.select(id_col, text_col), id_col, text_col).localCheckpoint()
-    blocks = fp.select(
-        F.col(id_col).alias("doc"),
-        F.col("simhash"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(64 // block_bits - 1)),
-                lambda b: F.shiftrightunsigned(
-                    F.col("simhash"), b * block_bits
-                ).bitwiseAND(F.lit((1 << block_bits) - 1)),
-            )
-        ).alias("block_idx", "block_val"),
-    )
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.block_idx") == F.col("r.block_idx"))
-            & (F.col("l.block_val") == F.col("r.block_val"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-            hamming_distance(F.col("l.simhash"), F.col("r.simhash")).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-    )
-    return cand.where(F.col("hamming") <= max_hamming)
-
-
 def jaccard_pairs_exact(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
 ) -> DataFrame:

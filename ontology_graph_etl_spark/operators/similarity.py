@@ -47,25 +47,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_normalized(
-    df: DataFrame, vec_col: str, out_col: str = "unit_vec"
-) -> DataFrame:
-    """Attach an L2-normalized copy (double precision) of the embedding.
-
-    The norm is computed once per row into a real column and the divide
-    references that column — embedding ``_norm`` inside the per-element
-    lambda would re-run the whole-vector fold per component (O(d²)/row;
-    higher-order functions are interpreted, no common-subexpression
-    elimination saves you).
-    """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return (
-        df.withColumn("__l2", _norm(v))
-        .withColumn(out_col, F.transform(v, lambda x: x / F.col("__l2")))
-        .drop("__l2")
-    )
-
-
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two raw (unnormalized) vectors, double math:
     three single-pass folds (dot + both norms), zero-vector safe."""
@@ -568,34 +549,18 @@ def semantic_dedup_clusters(
     )
 
 
-def _literal_best_expr(vec: Column, cent_vecs) -> Column:
-    """The literal-path argmax candidate struct — ``array_max`` over
-    the k rounded-cosine candidates ``struct(sim, neg_cid)`` with the
-    k×dim centroid matrix embedded as literals. Extracted from
-    :func:`kmeans_assign` (byte-identical expression tree) so the
-    assignment can be INLINED as one projection wherever the old shape
-    was ``kmeans_assign(df).join(df, id)`` — the join-back was a
-    corpus-sized self-join (two exchanges + sort) purely to re-attach
-    columns the projection never had to drop (guide §2.4: remove
-    shuffles outright)."""
-    scored = F.array(
-        *[
-            F.struct(
-                F.round(
-                    cosine(
-                        vec,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                    ),
-                    6,
-                ).alias("sim"),
-                # negate so array_max's lexicographic struct compare
-                # resolves sim ties to the LOWEST centroid id
-                F.lit(-i).alias("neg_cid"),
-            )
-            for i, c in enumerate(cent_vecs)
-        ]
+def _md5_seeds(df: DataFrame, id_col: str, vec_col: str, k: int):
+    """The ``k`` vectors with the smallest ``(md5(id), id)`` as float
+    lists — the deterministic k-means seed pick (k rows to the
+    driver)."""
+    rows = (
+        df.select(id_col, vec_col)
+        .withColumn("__o", F.md5(F.col(id_col).cast("string")))
+        .orderBy("__o", id_col)
+        .limit(k)
+        .collect()
     )
-    return F.array_max(scored)
+    return [[float(x) for x in r[vec_col]] for r in rows]
 
 
 def kmeans_assign(
@@ -603,8 +568,6 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
-    method: str = "auto",
-    max_literal_entries: int = 4096,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Deterministic k-means assignment step (the E-step of Lloyd's, and
@@ -620,83 +583,31 @@ def kmeans_assign(
     boundary is identical in any engine that computes the same rounded
     value.
 
+    Output: ``(id, centroid_id, sim)``, one row per input row — a
+    duplicated id yields one row per occurrence, each assigned from
+    its own vector. A NULL vector, a vector with a NULL element, or
+    one whose length differs from the centroids' gets
+    ``(0, NULL)``. A non-finite component (NaN or ±Inf) in a vector or
+    a centroid raises ``ValueError``.
+
     Scale shape: the seed pick is a tiny global top-k (k rows to the
-    driver). Assignment has two physical strategies, same rounded-argmax
-    contract (identical JVM double arithmetic, so identical output):
-
-    - ``literal`` — the k×dim centroid matrix embedded as literals in a
-      per-row expression: zero shuffle, zero Python. Plan size is
-      O(k·dim); past a few thousand entries Catalyst analysis time
-      becomes the bottleneck (a plan-size bomb at the k≈1000s used for
-      real semantic sharding).
-    - ``broadcast`` — the k×dim centroid matrix ships inside ONE
-      Arrow-vectorized batch node's task closure (r17; previously a
-      broadcast k-row crossJoin + per-id max whose one keyed shuffle
-      carried every corpus vector): a zero-shuffle projection, same
-      rounded-argmax arithmetic via :func:`_np_argmax_rounded`
-      (property-pinned equal to the literal path, NULL rows
-      included). Plan size is O(1) in k.
-
-    ``auto`` picks ``literal`` while ``k·dim <= max_literal_entries``.
+    driver); the assignment is ONE Arrow argmax node
+    (:func:`_assign_col`) — a zero-shuffle projection whose plan is
+    O(1) in k (the k×dim centroid matrix rides the task closure).
 
     ``centroids=`` skips the seed pick and assigns against the given
-    k×dim list (centroid id = list position) — the E-step under
-    :func:`kmeans_train`'s trained centroids, same rounded-argmax
-    contract.
+    k×dim list (centroid id = list position; ``k`` is ignored) — the
+    E-step under :func:`kmeans_train`'s trained centroids, same
+    rounded-argmax contract.
     """
-    if centroids is not None:
-        # the k parameter is meaningless under explicit centroids (it
-        # would misestimate the literal/broadcast plan-size decision
-        # and mislead callers) — the centroid list IS the k
-        k = len(centroids)
-        seeds = [{vec_col: [float(x) for x in c]} for c in centroids]
-    else:
-        seeds = (
-            df.select(id_col, vec_col)
-            .withColumn("__o", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__o", id_col)
-            .limit(k)
-            .collect()
-        )
-    if method == "auto":
-        dim = len(seeds[0][vec_col]) if seeds else 0
-        method = "literal" if k * dim <= max_literal_entries else "broadcast"
-    if method not in ("literal", "broadcast"):
-        raise ValueError(f"unknown kmeans_assign method {method!r}")
-    if not seeds:
-        # Empty input ⇒ no centroids; return the empty result with the
-        # output schema instead of letting either strategy hit an
-        # analysis-time error (F.array() over zero centroid structs).
-        return df.select(
-            F.col(id_col),
-            F.lit(None).cast("int").alias("centroid_id"),
-            F.lit(None).cast("double").alias("sim"),
-        )
-    if method == "broadcast":
-        # r17 (guide §3/§4): ONE Arrow batch node instead of
-        # crossJoin(broadcast k-row frame) → per-id max(struct) — the
-        # old shape's one keyed shuffle carried every corpus vector
-        # inside the max struct per call; the UDF form is a zero-
-        # shuffle projection with the same rounded-argmax contract
-        # (property-pinned equal to the literal path, NULL rows
-        # included). Plan stays O(1) in k (the centroid matrix rides
-        # the task closure, not the plan).
-        cvecs = [[float(x) for x in row[vec_col]] for row in seeds]
-        assign = _assign_cols_udf(cvecs, len(cvecs[0]))
-        return df.select(
-            F.col(id_col), assign(F.col(vec_col)).alias("__a")
-        ).select(
-            F.col(id_col),
-            F.col("__a.centroid_id").alias("centroid_id"),
-            F.col("__a.sim").alias("sim"),
-        )
-    best = _literal_best_expr(
-        F.col(vec_col), [row[vec_col] for row in seeds]
-    )
+    if centroids is None:
+        centroids = _md5_seeds(df, id_col, vec_col, k)
     return df.select(
+        F.col(id_col), _assign_col(F.col(vec_col), centroids).alias("__a")
+    ).select(
         F.col(id_col),
-        (-best["neg_cid"]).alias("centroid_id"),
-        best["sim"].alias("sim"),
+        F.col("__a.centroid_id").alias("centroid_id"),
+        F.col("__a.sim").alias("sim"),
     )
 
 
@@ -739,11 +650,10 @@ def semantic_outlier_gate(
     MERGEABLE sketch, so the per-cluster aggregate partial-aggregates
     map-side instead of shuffling every row to its cluster's reducer.
     Scale shape: the assignment is kmeans_assign's zero-shuffle
-    literal argmax (or broadcast form past the plan-size bound), the
-    cutoff table is k rows and broadcast-joins back; the assignment
-    projection computes twice (once under the aggregate, once for the
-    join probe) — two narrow scans, the q138 trade, cheaper than
-    materializing a corpus-sized frame.
+    Arrow argmax, the cutoff table is k rows and broadcast-joins back;
+    the assignment projection computes twice (once under the
+    aggregate, once for the join probe) — two narrow scans, the q138
+    trade, cheaper than materializing a corpus-sized frame.
     """
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0, 1), got {q}")
@@ -782,7 +692,6 @@ def kmeans_train(
     vec_col: str = "embedding",
     k: int = 8,
     rounds: int = 2,
-    method: str = "auto",
 ) -> list[list[float]]:
     """Deterministic Lloyd training: ``rounds`` full E/M iterations from
     the md5-seeded start, returning the k trained centroids (feed them
@@ -810,10 +719,8 @@ def kmeans_train(
       re-seeding RNG).
 
     Scale shape per round: ONE pass — the assignment is inlined into
-    the stats projection (literal centroids: zero-shuffle expression;
-    past the plan-size bound: one Arrow argmax node, also zero
-    shuffle — r17, replacing the crossJoin+per-id-max whose keyed
-    shuffle carried every corpus vector each round) feeding a
+    the stats projection (one zero-shuffle Arrow argmax node,
+    :func:`_assign_col`) feeding a
     ``posexplode``→``groupBy(cid, pos)`` aggregate whose map-side
     combine collapses n·dim rows to k·dim per partition before the
     shuffle; only k·dim aggregated rows reach the driver (the same
@@ -826,56 +733,18 @@ def kmeans_train(
 
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    seed_rows = (
-        df.select(id_col, vec_col)
-        .withColumn("__o", F.md5(F.col(id_col).cast("string")))
-        .orderBy("__o", id_col)
-        .limit(k)
-        .collect()
-    )
-    cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
+    cents = _md5_seeds(df, id_col, vec_col, k)
     if not cents:
         return []
-    dim = len(cents[0])
-    eff = method
-    if eff == "auto":
-        eff = "literal" if k * dim <= 4096 else "broadcast"
-    if eff not in ("literal", "broadcast"):
-        raise ValueError(f"unknown kmeans_assign method {method!r}")
     for _ in range(rounds):
-        # (centroid_id, vec) WITHOUT the old ``df.join(assign, id)``
-        # corpus self-join: the assignment is a projection over df, so
-        # joining it back to df re-shuffled the whole corpus by id
-        # every round purely to re-attach the vector column the
-        # projection had in hand (guide §2.4). Literal path: one
-        # zero-shuffle projection; broadcast path: the vector rides
-        # inside the per-id max struct (sim/neg_cid decide — neg_cid
-        # is unique per id, so the vector never participates in the
-        # comparison), one keyed shuffle instead of a join.
-        if eff == "literal":
-            best = _literal_best_expr(F.col(vec_col), cents)
-            assigned = df.select(
-                (-best["neg_cid"]).alias("centroid_id"),
-                F.col(vec_col),
-            )
-        else:
-            # r17 (guide §3/§4): the per-round keyed shuffle is gone —
-            # the old shape crossJoined the broadcast centroid frame
-            # and shuffled the corpus by id (the vector riding inside
-            # the per-id max struct) EVERY Lloyd round; one Arrow
-            # argmax node assigns in place, so the only per-round
-            # exchange left is the k·dim-row map-side-combined stats
-            # aggregate below. Same rounded-argmax contract
-            # (property-pinned equal to the literal path).
-            assign = _assign_cols_udf(
-                [[float(x) for x in c] for c in cents], dim
-            )
-            assigned = df.select(
-                assign(F.col(vec_col))["centroid_id"].alias(
-                    "centroid_id"
-                ),
-                F.col(vec_col),
-            )
+        # (centroid_id, vec) as one projection over df — no corpus
+        # self-join to re-attach the vector column (guide §2.4)
+        assigned = df.select(
+            _assign_col(F.col(vec_col), cents)["centroid_id"].alias(
+                "centroid_id"
+            ),
+            F.col(vec_col),
+        )
         stats = (
             assigned.select(
                 "centroid_id",
@@ -946,52 +815,20 @@ def ivf_topk_deterministic(
             corpus, id_col, vec_col, k=num_lists, rounds=train_rounds
         )
     else:
-        seeds = (
-            corpus.select(id_col, vec_col)
-            .withColumn("__o", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__o", id_col)
-            .limit(num_lists)
-            .collect()
-        )
-        cents = [[float(x) for x in r[vec_col]] for r in seeds]
+        cents = _md5_seeds(corpus, id_col, vec_col, num_lists)
     ctr = F.broadcast(
         spark.createDataFrame(
             [(i, c) for i, c in enumerate(cents)],
             "list_id int, centroid array<double>",
         )
     )
-    if cents and num_lists * len(cents[0]) <= 4096:
-        # assignment inlined as ONE projection — the old
-        # kmeans_assign(corpus).join(corpus, id) shape re-shuffled the
-        # corpus by id (two exchanges + sorts) purely to re-attach the
-        # vector column (guide §2.4); the literal argmax is the same
-        # expression kmeans_assign would emit, so list membership is
-        # bit-identical
-        best = _literal_best_expr(F.col(vec_col), cents)
-        assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            (-best["neg_cid"]).alias("list_id"),
-            F.col(vec_col).alias("c_raw"),
-        )
-    else:
-        # past the literal plan-size bound (or empty corpus) keep the
-        # broadcast-assign + join-back shape
-        assigned = (
-            kmeans_assign(
-                corpus, id_col, vec_col, k=num_lists, centroids=cents
-            )
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("centroid_id").alias("list_id"),
-            )
-            .join(
-                corpus.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("c_raw"),
-                ),
-                "neighbor_id",
-            )
-        )
+    # list membership as one projection over the corpus (no join-back
+    # by id to re-attach the vector column, guide §2.4)
+    assigned = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        _assign_col(F.col(vec_col), cents)["centroid_id"].alias("list_id"),
+        F.col(vec_col).alias("c_raw"),
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_raw")
     )
@@ -1566,32 +1403,13 @@ def _ivf_rows(
     frame: DataFrame, id_col: str, vec_col: str, cents
 ) -> DataFrame:
     """``(vec_id, list_id, embedding)`` store rows for an IVF
-    build/merge — the assignment INLINED as one projection when the
-    centroid matrix fits kmeans_assign's literal plan-size bound
-    (the old ``kmeans_assign(frame).join(frame, id)`` shape
-    re-shuffled the frame by id purely to re-attach the vector column
-    — guide §2.4; list membership is bit-identical because the
-    literal argmax is the exact expression kmeans_assign emits)."""
-    if cents and len(cents) * len(cents[0]) <= 4096:
-        best = _literal_best_expr(F.col(vec_col), cents)
-        return frame.select(
-            F.col(id_col).alias("vec_id"),
-            (-best["neg_cid"]).alias("list_id"),
-            F.col(vec_col).cast("array<double>").alias("embedding"),
-        )
-    return (
-        kmeans_assign(frame, id_col, vec_col, centroids=cents)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col("centroid_id").alias("list_id"),
-        )
-        .join(
-            frame.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("embedding"),
-            ),
-            "vec_id",
-        )
+    build/merge — the assignment as one projection over the frame
+    (:func:`_assign_col`; no join-back by id to re-attach the vector
+    column, guide §2.4)."""
+    return frame.select(
+        F.col(id_col).alias("vec_id"),
+        _assign_col(F.col(vec_col), cents)["centroid_id"].alias("list_id"),
+        F.col(vec_col).cast("array<double>").alias("embedding"),
     )
 
 
@@ -1616,7 +1434,7 @@ def write_ivf_index(
     permutation-constant poisoning). Returns the trained centroids.
 
     At 100 TB: one training pass (k·dim driver state), one assignment
-    pass (zero shuffle on the literal path), one partitioned write —
+    pass (zero shuffle), one partitioned write —
     and the stored layout is the probe-side equi-join input, so reads
     prune to the probed lists.
     """
@@ -1625,14 +1443,7 @@ def write_ivf_index(
             corpus, id_col, vec_col, k=num_lists, rounds=train_rounds
         )
     else:
-        seeds = (
-            corpus.select(id_col, vec_col)
-            .withColumn("__o", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__o", id_col)
-            .limit(num_lists)
-            .collect()
-        )
-        cents = [[float(x) for x in r[vec_col]] for r in seeds]
+        cents = _md5_seeds(corpus, id_col, vec_col, num_lists)
     spark = corpus.sparkSession
     rows = _ivf_rows(corpus, id_col, vec_col, cents)
     rows.write.mode("overwrite").parquet(path)
@@ -1877,54 +1688,6 @@ _PQ_SIDECAR = "_pq_ivf_params.json"
 _PQ_KEYS = ("num_lists", "m", "ksub", "centroids", "codebooks")
 
 
-def _pq_codes_expr(vec: Column, dim: int, codebooks) -> Column:
-    """The PQ encoding as ONE per-row expression — an ``array<int>``
-    of ``m`` sub-space codes, each the rounded-argmax nearest
-    sub-centroid (round(cos, 6) before the argmax, ties to the LOWEST
-    code — kmeans_assign's literal-path contract verbatim, so the
-    whole encoding re-derives in SQL). Zero joins, zero Python, and
-    — critically — ZERO higher-order functions: HOF lambdas are
-    interpreted row-at-a-time (the q141 hashed-BoW lesson; the first
-    cut of this encoder spent 13 s of q176's certification in
-    zip_with/aggregate folds), so every dot and norm is UNROLLED into
-    plain element_at arithmetic that whole-stage codegen compiles.
-    The fold ORDER is preserved exactly (leading 0.0 term included),
-    and each sub-centroid's norm collapses to a Python-computed
-    literal (same left-to-right IEEE sum) — the emitted doubles are
-    bit-identical to the cosine()-based form, which the oracle's
-    list_sum folds mirror."""
-    import math
-
-    m = len(codebooks)
-    dsub = dim // m
-    codes = []
-    for j, book in enumerate(codebooks):
-        base = j * dsub
-        comps = [F.element_at(vec, base + i + 1) for i in range(dsub)]
-        nsq = F.lit(0.0)
-        for c_ in comps:
-            nsq = nsq + c_ * c_
-        norm_sub = F.greatest(F.sqrt(nsq), F.lit(1e-12))
-        cands = []
-        for ci, c in enumerate(book):
-            dot = F.lit(0.0)
-            for i in range(dsub):
-                dot = dot + comps[i] * F.lit(float(c[i]))
-            norm_c = max(
-                math.sqrt(sum(float(x) * float(x) for x in c)), 1e-12
-            )
-            cands.append(
-                F.struct(
-                    F.round(dot / (norm_sub * F.lit(norm_c)), 6).alias(
-                        "sim"
-                    ),
-                    F.lit(-ci).alias("neg_c"),
-                )
-            )
-        codes.append((-F.array_max(F.array(*cands))["neg_c"]).cast("int"))
-    return F.array(*codes)
-
-
 def _round6_half_up(a):
     """Vectorized twin of Spark's ``F.round(x, 6)`` on doubles.
     Spark rounds the DECIMAL value of the double's shortest string
@@ -1993,24 +1756,30 @@ def _np_argmax_rounded(sub, book, bnorms):
     return best_code, best_sim
 
 
-def _assign_cols_udf(cents, dim: int):
-    """Arrow-vectorized twin of the BROADCAST assignment strategy —
-    ``struct(centroid_id, sim)`` per row from one batch node, replacing
-    the crossJoin(k-row frame) → per-id max(struct) shape whose ONE
-    keyed shuffle carried the whole corpus (vector riding inside the
-    max struct) every call (r17; guide §3/§4 — the r16 PQ-encoder
-    precedent applied to the k·dim > 4096 assignment path). The k×dim
-    centroid matrix ships once per task inside the UDF closure —
-    exactly the bytes the broadcast frame shipped — and the
+def _assign_col(vec: Column, cents) -> Column:
+    """The centroid assignment of ``vec`` against the k×dim ``cents``
+    as a ``struct(centroid_id int, sim double)`` column, computed by
+    ONE Arrow-vectorized batch node — the single assignment path of
+    :func:`kmeans_assign`, :func:`kmeans_train`,
+    :func:`ivf_topk_deterministic` and the IVF store rows. The
     rounded-argmax (:func:`_np_argmax_rounded`) reproduces
-    round(cosine, 6) + ties-to-lowest-cid bit-for-bit
-    (property-pinned equal to the literal path).
+    ``round(cosine(vec, c), 6)`` per centroid with ties to the lowest
+    centroid id bit-for-bit (the tests keep the literal-matrix
+    expression form as the executable spec). The centroid matrix
+    ships once per task inside the UDF closure, so the plan is O(1)
+    in k.
 
-    NULL semantics mirror BOTH JVM strategies: a NULL vector or any
-    length mismatch makes every ``zip_with`` product NULL, so sim is
-    NULL and the argmax ties to centroid 0 ⇒ ``(0, NULL)``. NaN
-    components are out of contract and raise (the
-    :func:`_pq_store_cols_udf` contract)."""
+    NULL semantics mirror the expression spec: a NULL vector, a NULL
+    element (routed to the NULL path in the JVM — through Arrow it
+    would arrive as NaN) or a length other than dim makes every
+    ``zip_with`` product NULL, so sim is NULL and the argmax ties to
+    centroid 0 ⇒ ``(0, NULL)``. Non-finite components (NaN, ±Inf) in
+    a vector or a centroid raise ``ValueError``: they make NaN sims,
+    which Spark's ``array_max`` orders above every double while the
+    strictly-greater NumPy argmax never picks them, so no
+    bit-identical answer exists (the :func:`_pq_store_cols_udf` NaN
+    policy). Centroids of unequal length raise ``ValueError`` too. No
+    centroids ⇒ ``(NULL, NULL)`` per row."""
     import math
 
     import numpy as np
@@ -2021,7 +1790,18 @@ def _assign_cols_udf(cents, dim: int):
         StructType,
     )
 
-    cmat = np.asarray(cents, dtype=np.float64)
+    if not cents:
+        return F.struct(
+            F.lit(None).cast("int").alias("centroid_id"),
+            F.lit(None).cast("double").alias("sim"),
+        )
+    dim = len(cents[0])
+    cmat = np.asarray(cents, dtype=np.float64)  # ragged: ValueError
+    if not np.isfinite(cmat).all():
+        raise ValueError(
+            "kmeans assignment: non-finite centroid component — out of "
+            "the rounded-argmax bit-identical contract"
+        )
     cnorms = np.asarray(
         [
             max(math.sqrt(sum(float(x) * float(x) for x in c)), 1e-12)
@@ -2040,7 +1820,7 @@ def _assign_cols_udf(cents, dim: int):
     def _assign(vecs: pd.Series) -> pd.DataFrame:
         notna = vecs.notna().to_numpy()
         mask = np.asarray(
-            [ok and len(v) == dim for v, ok in zip(vecs, notna)]
+            [ok and len(v) == dim for v, ok in zip(vecs, notna)], dtype=bool
         )
         n_all = len(vecs)
         cid = np.zeros(n_all, dtype=np.int64)
@@ -2053,10 +1833,10 @@ def _assign_cols_udf(cents, dim: int):
                     if ok
                 ]
             )
-            if np.isnan(V).any():
+            if not np.isfinite(V).all():
                 raise ValueError(
-                    "kmeans assignment: NaN vector component — NaN "
-                    "embeddings are out of the rounded-argmax "
+                    "kmeans assignment: non-finite vector component — "
+                    "NaN/Inf embeddings are out of the rounded-argmax "
                     "bit-identical contract; sanitize vectors upstream"
                 )
             code, best = _np_argmax_rounded(V, cmat, cnorms)
@@ -2069,7 +1849,9 @@ def _assign_cols_udf(cents, dim: int):
             }
         )
 
-    return _assign
+    # a NULL element reaches NumPy as NaN; route such rows to the NULL
+    # vector path here, where the JVM still sees the NULL
+    return _assign(F.when(F.size(F.array_compact(vec)) == F.size(vec), vec))
 
 
 def _pq_store_cols_udf(cents, dim: int, codebooks):
@@ -2078,12 +1860,13 @@ def _pq_store_cols_udf(cents, dim: int, codebooks):
     the SAME scalar fold orders as the expression forms, so every
     emitted double and every rounded-argmax decision is bit-identical
     (property-pinned in tests/test_properties.py; the certified q176
-    oracle CTEs mirror the same folds):
+    oracle CTEs mirror the same folds; the expression specs live in
+    tests/similarity_specs.py):
 
-    - coarse ``list_id`` = :func:`_literal_best_expr`'s rounded-argmax
+    - coarse ``list_id`` = ``literal_best_expr``'s rounded-argmax
       (round(dot/(norm_v·norm_c), 6) per centroid, ties to the LOWEST
       id; ``norm_v = max(sqrt(0+v0²+v1²+…), 1e-12)`` left fold);
-    - ``codes`` = :func:`_pq_codes_expr`'s per-sub-space rounded
+    - ``codes`` = ``pq_codes_expr``'s per-sub-space rounded
       argmax, same contract per sub-slice;
     - ``norm`` = the left-fold ``sqrt(0+Σv²)`` (NO 1e-12 floor — the
       stored norm keeps ``F.aggregate``'s raw value).
@@ -2229,8 +2012,8 @@ def _pq_rows(
     build/merge — coarse assignment, PQ encoding and the norm all
     computed by ONE Arrow-vectorized batch node over one projection
     (:func:`_pq_store_cols_udf`; bit-identical to the expression
-    spec :func:`_pq_codes_expr` / :func:`_literal_best_expr`, which
-    the q176 oracle CTEs mirror). The pre-r16 shapes paid (a) a
+    specs kept in ``tests/similarity_specs.py``, which the q176 oracle
+    CTEs mirror). The pre-r16 shapes paid (a) a
     frame-sized self-join to re-attach columns the projection had in
     hand (guide §2.4) and (b) ~2300-node unrolled expression trees
     whose Catalyst analysis dominated wall time and overflowed
@@ -2835,8 +2618,8 @@ def cluster_balanced_sample(
     kept rows, deterministic across runs/engines/partitionings
     (md5-everything: seeds, assignment tie-breaks, and the pick).
 
-    Scale shape: the q76 assignment plan (zero-shuffle literal path at
-    small k·dim) plus ONE hash shuffle on the cluster id with
+    Scale shape: the q76 assignment plan (one zero-shuffle Arrow
+    argmax node) plus ONE hash shuffle on the cluster id with
     InferWindowGroupLimit pruning map-side — the shuffle carries
     O(per_cluster · k · tasks), not the corpus."""
     from .relational import stratified_sample_exact_k

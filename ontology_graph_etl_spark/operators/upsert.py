@@ -45,20 +45,6 @@ def first_wins(
     )
 
 
-def last_wins(
-    df: DataFrame, keys: Sequence[str], order_col: str | Sequence[str]
-) -> DataFrame:
-    """Last-wins variant (``MERGE ... SET`` semantics): highest order wins."""
-    w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).desc() for c in _order_cols(order_col)]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def update_by_key(
     base: DataFrame,
     updates: DataFrame,

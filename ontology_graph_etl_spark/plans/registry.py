@@ -10014,121 +10014,45 @@ LEFT JOIN ss_agg ss USING (doc_id)
 # then everything whose implementation changed this round; the tail
 # holds queries green in the immediately preceding CORRECTNESS file and
 # untouched since.
-#
-# ROUND-12 ROTATION (tests/test_properties.py::
-# test_certification_window_freshness enforces this policy
-# mechanically from the CORRECTNESS_r*.json history + RECERTIFY; the
-# window must be a top-50-by-staleness set — no inversion — with a
-# hard ceil(N/50)-round staleness cap on anything left outside; an
-# UNROTATED window is judged retrospectively on the pre-view, a
-# ROTATED one prospectively on the full history).
-# This window was REGENERATED MECHANICALLY from the CORRECTNESS
-# history (print names bucketed by latest-green round — the r11
-# procedure, now the standing one): the 37 names whose last green
-# row is r9 (they reach the ceil(134/50)=3-round cap when the r12
-# artifact lands, so they must certify now), then 13 r10-green
-# fills in prior registry order (all r10 names tie at priority 1;
-# the remaining 34 lead the tail and seed the r13 window). The 50
-# r11-green names close the tail, maximally fresh. The freshness
-# guard (test_certification_window_freshness) is the mechanical
-# authority; regenerate this comment from the list when rotating.
-# New queries registered mid-round are inserted at the window head
-# (never-certified names must sit in the window); each insertion
-# pushes the window's last entry to the tail head.
 
 #: Queries whose LAST green driver row predates a contract change
-#: (oracle text or Spark plan) — the freshness guard treats them like
-#: never-certified names (must sit in the window). RECERTIFY_ROUND is
-#: the round whose window re-certifies them: once a CORRECTNESS file
-#: of that round (or later) carries their green row, the guard FAILS
-#: until the names are removed — the set cannot silently pin window
-#: slots forever. The six r14 members (q154/q162/q163/q164 advice
-#: fixes, q155 capped cert, q158 walk rebuild) left the set this
-#: round: their green r14 rows exist, and keeping them past the
-#: certifying round would trip the pre-view self-clear on the r15
-#: artifact (the round-8 failure mode q112 navigated in r10). Add
-#: any query whose oracle text or executed plan changes this round,
-#: and bump RECERTIFY_ROUND to 15.
-RECERTIFY_ROUND = 17
+#: (oracle text or executed Spark plan) — the freshness guard treats
+#: them like never-certified names (must sit in the window).
+#: RECERTIFY_ROUND is the round whose window re-certifies them: once a
+#: CORRECTNESS file of that round (or later) carries their green row,
+#: the guard FAILS until the names are removed, so the set cannot pin
+#: window slots forever. Add any query whose oracle text or executed
+#: plan changes, and set RECERTIFY_ROUND to the next round.
+RECERTIFY_ROUND = 18
 RECERTIFY: set[str] = {
-    # r16 optimization batches whose EXECUTED PLANS changed after the
-    # r16 window rotation was committed, so the driver has no green
-    # row for the new plans (the r16 VERDICT's mandatory item 1):
-    # q63/q76/q86/q119-q123/q137/q141/q146/q176/q178 via the
-    # similarity.py Arrow-encoder rewrite + kmeans-assign self-join
-    # removal + shared seed collect (q86 already re-certified green
-    # in-window in r16, so it is NOT re-listed here); q50/q78/q138
-    # via the dedup/substring index-build projection rework (band
-    # explode carries the shingle array; join-back removed).
-    "q63_ivf_topk",
+    # centroid assignment became one Arrow argmax node (the literal
+    # k×dim matrix expression and the join-back fallbacks are gone):
+    # kmeans_assign / kmeans_train (q76, q119, q146, q140),
+    # ivf_topk_deterministic (q86, q122, q180's fresh pass) and the
+    # IVF store rows (q137, q141, q180's build and merge)
     "q76_kmeans_assign",
     "q119_kmeans_train",
-    "q120_index_screen",
-    "q121_retrieval_eval",
     "q122_ivf_trained_topk",
-    "q123_quantize_recon",
     "q137_stored_ivf_search",
     "q141_retrieval_pipeline",
     "q146_semantic_outlier_gate",
-    "q176_pq_ivf_search",
-    "q178_semantic_join",
-    "q50_minhash_simjoin",
-    "q78_incremental_dedup",
-    "q138_substring_index_screen",
-    # r17 optimization: cosine_topk's pair scoring moved from the
-    # interpreted zip_with/aggregate HOF fold to the Arrow pair twin
-    # (_pair_cos6_udf, bit-identical — property-pinned incl. NULL /
-    # ragged pairs) — the queries whose EXECUTED plans contain the
-    # brute-force top-k change shape (q63/q121 already above; q121/
-    # q180/q184 consume it behind a localCheckpoint, so their executed
-    # plans are byte-stable — fingerprint-checked against the r17
-    # baseline capture — and stay out):
-    "q51_cosine_topk",
-    "q115_hybrid_retrieval",
-    "q183_rerank",
-    # r17 optimization: kcore peel loop repartitioned on `a` once (the
-    # q37 device) — per-round degree shuffle removed, survivor set
-    # count-gated broadcast. The RETURNED frame's normalized plan
-    # fingerprint happens to stay stable (the change lives in the
-    # loop's checkpointed per-round jobs), but the executed job chain
-    # is new — kept in RECERTIFY as the conservative direction.
-    "q126_kcore",
+    "q86_ivf_det_topk",
+    "q140_cluster_balanced_sample",
+    "q180_ivf_calibration",
 }
 
 QUERIES: list[QueryDef] = [
-    # --- ROUND-17 WINDOW (first 50) ---
-    # REGENERATED MECHANICALLY from the CORRECTNESS history (the
-    # standing r11 procedure: bucket names by latest-green round,
-    # fill by staleness). Composition: the 19 round-17 RECERTIFY
-    # members (15 from the r16 optimization batches — similarity.py
-    # Arrow-encoder rewrite + self-join removal for q63/q76/q119-q123/
-    # q137/q141/q146/q176/q178, dedup/substring index-build rework for
-    # q50/q78/q138 — the r16 VERDICT's mandatory item 1; 4 from r17
-    # optimizations: the cosine_topk Arrow pair-scoring rewrite
-    # changes q51/q115/q183's executed plans — q121/q180/q184 consume
-    # the truth pass behind a localCheckpoint, fingerprint-verified
-    # byte-stable, and stay out — and the kcore repartition-once
-    # rework changes q126's), then 31 r13-green fills in prior
-    # registry order (staleness 3 on the r16 artifact). Seven
-    # r13-green names (q114/q116/q117/q118/q109/q108/q15) tie at
-    # staleness 3 just outside the window (no inversion: boundary
-    # tie) and lead the tail to seed the r18 window, with the
-    # r14/r15/r16 blocks behind them;
-    # test_certification_window_freshness is the mechanical authority.
-    # New queries registered mid-round insert at the window head, each
-    # pushing the window's last entry to the tail head.
-    QueryDef("q123_quantize_recon", _q123_quantize_recon, _q123_sql(), "§2.11"),
+    # --- ROUND-18 WINDOW (first 50) ---
+    # Generated from the CORRECTNESS history: the RECERTIFY members,
+    # then the remaining names stalest first (registry order breaks
+    # ties). test_certification_window_freshness is the authority.
+    # New queries insert at the window head.
     QueryDef("q76_kmeans_assign", _q76_kmeans_assign, _q76_sql, "§2.11"),
+    QueryDef("q119_kmeans_train", _q119_kmeans_train, _q119_sql(), "§2.11"),
     QueryDef(
-        "q141_retrieval_pipeline",
-        _q141_retrieval_pipeline,
-        _q141_sql(),
-        "§2.11",
-    ),
-    QueryDef(
-        "q138_substring_index_screen",
-        _q138_substring_index_screen,
-        _q138_sql(),
+        "q122_ivf_trained_topk",
+        _q122_ivf_trained_topk,
+        _q122_sql(),
         "§2.11",
     ),
     QueryDef(
@@ -10138,41 +10062,9 @@ QUERIES: list[QueryDef] = [
         "§2.11",
     ),
     QueryDef(
-        "q50_minhash_simjoin",
-        _q50_minhash_simjoin,
-        _q50_oracle_sql(),
-        "§2.11",
-    ),
-    QueryDef(
-        "q178_semantic_join",
-        _q178_semantic_join,
-        _q178_sql,
-        "§2.11",
-    ),
-    QueryDef(
-        "q176_pq_ivf_search",
-        _q176_pq_ivf_search,
-        _q176_sql(),
-        "§2.11",
-    ),
-    QueryDef(
-        "q78_incremental_dedup",
-        _q78_incremental_dedup,
-        _q78_oracle_sql(),
-        "§2.11",
-    ),
-    QueryDef("q119_kmeans_train", _q119_kmeans_train, _q119_sql(), "§2.11"),
-    QueryDef("q121_retrieval_eval", _q121_retrieval_eval, _q121_sql(), "§2.11"),
-    QueryDef(
-        "q122_ivf_trained_topk",
-        _q122_ivf_trained_topk,
-        _q122_sql(),
-        "§2.11",
-    ),
-    QueryDef(
-        "q120_index_screen",
-        _q120_index_screen,
-        _q78_oracle_sql(7),
+        "q141_retrieval_pipeline",
+        _q141_retrieval_pipeline,
+        _q141_sql(),
         "§2.11",
     ),
     QueryDef(
@@ -10181,88 +10073,19 @@ QUERIES: list[QueryDef] = [
         _q146_sql(),
         "§2.11",
     ),
-    QueryDef("q63_ivf_topk", _q63_ivf_topk, _q63_sql, "§2.11"),
+    QueryDef("q86_ivf_det_topk", _q86_ivf_det_topk, _q86_sql(), "§2.11"),
     QueryDef(
-        "q115_hybrid_retrieval",
-        _q115_hybrid_retrieval,
-        _q115_sql,
-        "§2.11",
-    ),
-    QueryDef("q51_cosine_topk", _q51_cosine_topk, _q51_sql, "§2.11"),
-    QueryDef(
-        "q183_rerank",
-        _q183_rerank,
-        _q183_sql(),
-        "§2.11",
-    ),
-    QueryDef("q126_kcore", _q126_kcore, _q126_sql(), "G14"),
-    QueryDef(
-        "q159_group_ols",
-        _q159_group_ols,
-        _q159_sql,
-        "§2.7",
-    ),
-    QueryDef(
-        "q157_assoc_pairs",
-        _q157_assoc_pairs,
-        _q157_sql,
-        "§2.7",
-    ),
-    QueryDef(
-        "q156_scc",
-        _q156_scc,
-        _q156_sql,
-        "§2.8",
-    ),
-    QueryDef(
-        "q153_fuzzy_join",
-        _q153_fuzzy_join,
-        _q153_sql(),
+        "q140_cluster_balanced_sample",
+        _q140_cluster_balanced_sample,
+        _q140_sql(),
         "§2.11",
     ),
     QueryDef(
-        "q151_multimodal_neardup",
-        _q151_multimodal_neardup,
-        _q151_sql,
-        "multimodal",
-    ),
-    QueryDef(
-        "q150_bpe_train_deep",
-        _q150_bpe_train_deep,
-        _q150_sql(),
+        "q180_ivf_calibration",
+        _q180_ivf_calibration,
+        _q180_sql(),
         "§2.11",
     ),
-    QueryDef(
-        "q149_fixpoint_removal",
-        _q149_fixpoint_removal,
-        _q149_sql(),
-        "§2.11",
-    ),
-    QueryDef("q142_shard_export", _q142_shard_export, _q142_sql(), "§2.11"),
-    QueryDef("q87_semantic_dedup", _q87_semantic_dedup, _q87_sql, "§2.11"),
-    QueryDef("q93_boilerplate", _q93_boilerplate, _q93_sql, "§2.11"),
-    QueryDef("q94_dup_spans", _q94_dup_spans, _q94_sql, "§2.11"),
-    QueryDef("q96_temperature_mix", _q96_temperature_mix, _q96_sql, "§2.11"),
-    QueryDef("q20_join3", _q20_join3, _q20_sql, "§2.7"),
-    QueryDef("q21_agg_suite", _q21_agg_suite, _q21_sql, "§2.7"),
-    QueryDef("q22_sort_limit", _q22_sort_limit, _q22_sql, "§2.7"),
-    QueryDef("q23_window_rank", _q23_window_rank, _q23_sql, "§2.7"),
-    QueryDef("q24_set_ops", _q24_set_ops, _q24_sql, "§2.7"),
-    QueryDef("q25_rollup", _q25_rollup, _q25_sql, "§2.7"),
-    QueryDef("q27_cube", _q27_cube, _q27_sql, "§2.7"),
-    QueryDef("q01_scan_jsonl", _q01_scan_jsonl, _q01_sql, "S1,P1"),
-    QueryDef("q02_scan_map", _q02_scan_map, _q02_sql, "S3"),
-    QueryDef("q03_prefix_scan", _q03_prefix_scan, _q03_sql, "S5,P6"),
-    QueryDef("q04_meta_project", _q04_meta_project, _q04_sql, "S6"),
-    QueryDef("q08_lookup_join", _q08_lookup_join, _q08_sql, "J1,P5"),
-    QueryDef("q09_anti_join", _q09_anti_join, _q09_sql, "J2"),
-    QueryDef("q10_edge_join", _q10_edge_join, _q10_sql, "J3,G2"),
-    QueryDef("q13_group_count", _q13_group_count, _q13_sql, "A2"),
-    QueryDef("q14_upsert_first_wins", _q14_upsert_first_wins, _q14_sql, "A3,G1"),
-    QueryDef("q110_span_removal", _q110_span_removal, _q110_sql, "§2.11"),
-    QueryDef("q111_topo_depth", _q111_topo_depth, _q111_sql, "G12"),
-    QueryDef("q113_bm25_topk", _q113_bm25_topk, _q113_sql, "§2.11"),
-    # --- TAIL (not certified this round; stalest first, seeding the r18 window) ---
     QueryDef("q114_multi_profile", _q114_multi_profile, _q114_sql, "§2.11"),
     QueryDef("q116_pivot", _q116_pivot, _q116_sql, "§2.7"),
     QueryDef("q117_unpivot", _q117_unpivot, _q117_sql, "§2.7"),
@@ -10334,12 +10157,6 @@ QUERIES: list[QueryDef] = [
     QueryDef("q90_lpa_communities", _q90_lpa_communities, _q90_sql(), "§2.8"),
     QueryDef("q97_rolling_agg", _q97_rolling_agg, _q97_sql, "§2.7"),
     QueryDef(
-        "q140_cluster_balanced_sample",
-        _q140_cluster_balanced_sample,
-        _q140_sql(),
-        "§2.11",
-    ),
-    QueryDef(
         "q139_bigram_logprob",
         _q139_bigram_logprob,
         _q139_sql(),
@@ -10380,6 +10197,7 @@ QUERIES: list[QueryDef] = [
     QueryDef("q44_percentile", _q44_percentile, _q44_sql, "§2.7"),
     QueryDef("q45_topk_per_group", _q45_topk_per_group, _q45_sql, "§2.7"),
     QueryDef("q46_funnel", _q46_funnel, _q46_sql, "§2.10"),
+    # --- TAIL (stalest first, seeding the next window) ---
     QueryDef("q52_tfidf_topterms", _q52_tfidf_topterms, _q52_sql, "§2.11"),
     QueryDef("q54_exact_dedup", _q54_exact_dedup, _q54_sql, "§2.11"),
     QueryDef("q55_simhash", _q55_simhash, _q55_sql, "§2.11"),
@@ -10500,12 +10318,6 @@ QUERIES: list[QueryDef] = [
         "§2.11",
     ),
     QueryDef(
-        "q180_ivf_calibration",
-        _q180_ivf_calibration,
-        _q180_sql(),
-        "§2.11",
-    ),
-    QueryDef(
         "q185_url_ingest",
         _q185_url_ingest,
         _q185_sql(),
@@ -10606,7 +10418,6 @@ QUERIES: list[QueryDef] = [
     QueryDef("q26_asof_join", _q26_asof_join, _q26_sql, "§2.7"),
     QueryDef("q89_asof_forward", _q89_asof_forward, _q89_sql, "§2.7"),
     QueryDef("q82_lsh_neardup", _q82_lsh_neardup, _q82_sql, "§2.11"),
-    QueryDef("q86_ivf_det_topk", _q86_ivf_det_topk, _q86_sql(), "§2.11"),
     QueryDef("q85_curate", _q85_curate, _q85_sql(), "§2.11"),
     QueryDef("q80_binary_meta", _q80_binary_meta, _q80_sql, "multimodal"),
     QueryDef("q30_one_hop", _q30_one_hop, _q30_sql, "G3"),
@@ -10646,6 +10457,125 @@ QUERIES: list[QueryDef] = [
         _q160_sql(),
         "§2.11",
     ),
+    QueryDef("q123_quantize_recon", _q123_quantize_recon, _q123_sql(), "§2.11"),
+    QueryDef(
+        "q138_substring_index_screen",
+        _q138_substring_index_screen,
+        _q138_sql(),
+        "§2.11",
+    ),
+    QueryDef(
+        "q50_minhash_simjoin",
+        _q50_minhash_simjoin,
+        _q50_oracle_sql(),
+        "§2.11",
+    ),
+    QueryDef(
+        "q178_semantic_join",
+        _q178_semantic_join,
+        _q178_sql,
+        "§2.11",
+    ),
+    QueryDef(
+        "q176_pq_ivf_search",
+        _q176_pq_ivf_search,
+        _q176_sql(),
+        "§2.11",
+    ),
+    QueryDef(
+        "q78_incremental_dedup",
+        _q78_incremental_dedup,
+        _q78_oracle_sql(),
+        "§2.11",
+    ),
+    QueryDef("q121_retrieval_eval", _q121_retrieval_eval, _q121_sql(), "§2.11"),
+    QueryDef(
+        "q120_index_screen",
+        _q120_index_screen,
+        _q78_oracle_sql(7),
+        "§2.11",
+    ),
+    QueryDef("q63_ivf_topk", _q63_ivf_topk, _q63_sql, "§2.11"),
+    QueryDef(
+        "q115_hybrid_retrieval",
+        _q115_hybrid_retrieval,
+        _q115_sql,
+        "§2.11",
+    ),
+    QueryDef("q51_cosine_topk", _q51_cosine_topk, _q51_sql, "§2.11"),
+    QueryDef(
+        "q183_rerank",
+        _q183_rerank,
+        _q183_sql(),
+        "§2.11",
+    ),
+    QueryDef("q126_kcore", _q126_kcore, _q126_sql(), "G14"),
+    QueryDef(
+        "q159_group_ols",
+        _q159_group_ols,
+        _q159_sql,
+        "§2.7",
+    ),
+    QueryDef(
+        "q157_assoc_pairs",
+        _q157_assoc_pairs,
+        _q157_sql,
+        "§2.7",
+    ),
+    QueryDef(
+        "q156_scc",
+        _q156_scc,
+        _q156_sql,
+        "§2.8",
+    ),
+    QueryDef(
+        "q153_fuzzy_join",
+        _q153_fuzzy_join,
+        _q153_sql(),
+        "§2.11",
+    ),
+    QueryDef(
+        "q151_multimodal_neardup",
+        _q151_multimodal_neardup,
+        _q151_sql,
+        "multimodal",
+    ),
+    QueryDef(
+        "q150_bpe_train_deep",
+        _q150_bpe_train_deep,
+        _q150_sql(),
+        "§2.11",
+    ),
+    QueryDef(
+        "q149_fixpoint_removal",
+        _q149_fixpoint_removal,
+        _q149_sql(),
+        "§2.11",
+    ),
+    QueryDef("q142_shard_export", _q142_shard_export, _q142_sql(), "§2.11"),
+    QueryDef("q87_semantic_dedup", _q87_semantic_dedup, _q87_sql, "§2.11"),
+    QueryDef("q93_boilerplate", _q93_boilerplate, _q93_sql, "§2.11"),
+    QueryDef("q94_dup_spans", _q94_dup_spans, _q94_sql, "§2.11"),
+    QueryDef("q96_temperature_mix", _q96_temperature_mix, _q96_sql, "§2.11"),
+    QueryDef("q20_join3", _q20_join3, _q20_sql, "§2.7"),
+    QueryDef("q21_agg_suite", _q21_agg_suite, _q21_sql, "§2.7"),
+    QueryDef("q22_sort_limit", _q22_sort_limit, _q22_sql, "§2.7"),
+    QueryDef("q23_window_rank", _q23_window_rank, _q23_sql, "§2.7"),
+    QueryDef("q24_set_ops", _q24_set_ops, _q24_sql, "§2.7"),
+    QueryDef("q25_rollup", _q25_rollup, _q25_sql, "§2.7"),
+    QueryDef("q27_cube", _q27_cube, _q27_sql, "§2.7"),
+    QueryDef("q01_scan_jsonl", _q01_scan_jsonl, _q01_sql, "S1,P1"),
+    QueryDef("q02_scan_map", _q02_scan_map, _q02_sql, "S3"),
+    QueryDef("q03_prefix_scan", _q03_prefix_scan, _q03_sql, "S5,P6"),
+    QueryDef("q04_meta_project", _q04_meta_project, _q04_sql, "S6"),
+    QueryDef("q08_lookup_join", _q08_lookup_join, _q08_sql, "J1,P5"),
+    QueryDef("q09_anti_join", _q09_anti_join, _q09_sql, "J2"),
+    QueryDef("q10_edge_join", _q10_edge_join, _q10_sql, "J3,G2"),
+    QueryDef("q13_group_count", _q13_group_count, _q13_sql, "A2"),
+    QueryDef("q14_upsert_first_wins", _q14_upsert_first_wins, _q14_sql, "A3,G1"),
+    QueryDef("q110_span_removal", _q110_span_removal, _q110_sql, "§2.11"),
+    QueryDef("q111_topo_depth", _q111_topo_depth, _q111_sql, "G12"),
+    QueryDef("q113_bm25_topk", _q113_bm25_topk, _q113_sql, "§2.11"),
 ]
 
 

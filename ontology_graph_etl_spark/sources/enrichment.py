@@ -31,15 +31,6 @@ from pyspark.sql.types import (
 #: transport(concept_id) -> list of "Type:detail" strings, or None on error.
 Transport = Callable[[int], "list[str] | None"]
 
-ENRICHED_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_types", ArrayType(StringType()), True),
-        StructField("node_type", StringType(), True),
-    ]
-)
-
-
 def http_transport(url: str, timeout: float = 10.0) -> Transport:
     """Real transport hitting an enrichment endpoint (the reference's
     ``ooo-explorer/info`` shape, with the request key spelled correctly —

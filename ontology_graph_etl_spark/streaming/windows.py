@@ -191,13 +191,6 @@ def dedup_events(
     return events.dropDuplicates(list(keys))
 
 
-def read_event_stream(spark, path: str, schema) -> DataFrame:
-    """File-source stream over a parquet directory (the batch table's
-    streaming twin); ``maxFilesPerTrigger`` left default — bench/tests use
-    ``availableNow`` triggers for bounded runs."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def event_correlation_join(
     left: DataFrame,
     right: DataFrame,

@@ -7,6 +7,8 @@ refactor that silently de-optimizes a plan fails CI, not the cluster.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from ontology_graph_etl_spark.plans.registry import queries
@@ -106,37 +108,33 @@ def test_stratified_sample_is_scan_plus_filter(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_kmeans_broadcast_plan_constant_in_k(spark, sf_dir):
-    """kmeans_assign's broadcast strategy must not embed the centroid
-    matrix in the plan: at k=256 the literal form is a Catalyst
-    analysis bomb (O(k*dim) literals per row expression). Since r17 the
-    strategy is ONE Arrow argmax node (the centroid matrix rides the
-    task closure) — the plan must stay O(1) in k, contain exactly one
-    ArrowEvalPython, and contain NO exchange or join at all (the old
-    crossJoin + per-id max shape shuffled every corpus vector)."""
+def test_kmeans_assign_plan_constant_in_k(spark, sf_dir):
+    """kmeans_assign must not embed the centroid matrix in the plan
+    (O(k*dim) literals per row is a Catalyst analysis bomb at large
+    k). The assignment is ONE Arrow argmax node whose centroid matrix
+    rides the task closure: exactly one ArrowEvalPython, NO exchange
+    or join, and a plan that does not grow from k=8 to k=64."""
     from ontology_graph_etl_spark.io import load_table
     from ontology_graph_etl_spark.operators.similarity import kmeans_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
-    bc = kmeans_assign(emb, "vec_id", "embedding", k=64, method="broadcast")
-    plan = bc._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
     )
-    # one batch node, not two (formatted mode lists each node once in
-    # the tree — "ArrowEvalPython (n)" — and once in the details)
-    assert plan.count("ArrowEvalPython (") == 1
-    assert "Exchange" not in plan and "Join" not in plan
-    lit = kmeans_assign(emb, "vec_id", "embedding", k=64, method="literal")
-    lit_plan = lit._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    # the broadcast plan carries no per-row centroid literals; the
-    # literal plan at k=64 embeds the whole matrix per row expression
-    assert len(plan) < len(lit_plan) / 4
+    plans = {
+        k: kmeans_assign(
+            emb, "vec_id", "embedding", k=k
+        )._jdf.queryExecution().explainString(mode)
+        for k in (8, 64)
+    }
+    for plan in plans.values():
+        # one batch node, not two (formatted mode lists each node once
+        # in the tree — "ArrowEvalPython (n)" — and once in the details)
+        assert plan.count("ArrowEvalPython (") == 1
+        assert "Exchange" not in plan and "Join" not in plan
+    # expression ids (#123) differ between the two plans
+    size = {k: len(re.sub(r"#\d+", "#", p)) for k, p in plans.items()}
+    assert size[64] <= size[8]
 
 
 def test_lsh_neardup_is_equi_join(spark, sf_dir):

@@ -850,42 +850,41 @@ def test_kmeans_assign_matches_numpy(spark, vecs, k):
     assert len(got) == len(vecs)
 
 
+_UNIT = st.floats(-1, 1, allow_nan=False, width=32)
+
+
 @given(
     vecs=st.lists(
-        st.tuples(
-            st.integers(0, 10_000),
-            st.lists(
-                st.floats(-1, 1, allow_nan=False, width=32),
-                min_size=4, max_size=4,
-            ),
+        st.one_of(
+            st.none(),
+            st.lists(st.one_of(st.none(), _UNIT), min_size=3, max_size=5),
         ),
         min_size=1,
         max_size=20,
-        unique_by=lambda v: v[0],
     ),
-    k=st.sampled_from([1, 3, 8]),
+    cents=st.lists(
+        st.lists(_UNIT, min_size=4, max_size=4), min_size=1, max_size=8
+    ),
 )
 @settings(max_examples=8, deadline=None)
-def test_kmeans_broadcast_equals_literal(spark, vecs, k):
-    """The broadcast k-row-frame strategy is the same operator as the
-    literal strategy: identical JVM double arithmetic, identical
-    rounded-argmax tie-break, so exactly equal output on any input."""
+def test_kmeans_assign_matches_literal_spec(spark, vecs, cents):
+    """The Arrow assignment node is the same operator as the
+    literal-matrix expression spec: identical rounded-argmax
+    arithmetic and tie-break, so exactly equal output on any input —
+    NULL vectors, NULL elements and ragged lengths included (each
+    ``(0, NULL)``)."""
+    from similarity_specs import literal_assign
+
     from ontology_graph_etl_spark.operators.similarity import kmeans_assign
 
-    df = spark.createDataFrame(vecs, "vec_id: long, embedding: array<float>")
-    lit = {
-        r.vec_id: (r.centroid_id, r.sim)
-        for r in kmeans_assign(
-            df, "vec_id", "embedding", k, method="literal"
-        ).collect()
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id: long, embedding: array<float>"
+    )
+    got = kmeans_assign(df, "vec_id", "embedding", centroids=cents)
+    spec = literal_assign(df, "vec_id", "embedding", cents)
+    assert {r.vec_id: tuple(r) for r in got.collect()} == {
+        r.vec_id: tuple(r) for r in spec.collect()
     }
-    bc = {
-        r.vec_id: (r.centroid_id, r.sim)
-        for r in kmeans_assign(
-            df, "vec_id", "embedding", k, method="broadcast"
-        ).collect()
-    }
-    assert lit == bc
 
 
 @given(data=st.data())
@@ -1351,18 +1350,89 @@ def test_asof_tolerance_mixed_date_timestamp(spark):
     assert [r.payload for r in tight] == [None]
 
 
-def test_kmeans_assign_empty_input_both_methods(spark):
-    """Empty frame returns an empty result with the output schema for
-    every strategy instead of an analysis-time error."""
+def test_kmeans_assign_empty_input(spark):
+    """Empty frame returns an empty result with the output schema
+    instead of an analysis-time error; explicit empty centroids give
+    ``(NULL, NULL)`` per row."""
     from ontology_graph_etl_spark.operators.similarity import kmeans_assign
 
     empty = spark.createDataFrame(
         [], "vec_id: long, embedding: array<double>"
     )
-    for method in ("auto", "literal", "broadcast"):
-        out = kmeans_assign(empty, "vec_id", "embedding", 4, method=method)
-        assert out.columns == ["vec_id", "centroid_id", "sim"]
-        assert out.count() == 0
+    out = kmeans_assign(empty, "vec_id", "embedding", 4)
+    assert out.columns == ["vec_id", "centroid_id", "sim"]
+    assert out.dtypes[1:] == [("centroid_id", "int"), ("sim", "double")]
+    assert out.count() == 0
+    one = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id: long, embedding: array<double>"
+    )
+    got = kmeans_assign(one, "vec_id", "embedding", centroids=[]).collect()
+    assert [tuple(r) for r in got] == [(1, None, None)]
+
+
+def test_kmeans_assign_null_elements_match_literal_spec(spark):
+    """Element-NULL pin (the Arrow node sees a NULL element as NaN):
+    ``[1.0, NULL]``, a NULL vector, a short and a long vector all give
+    ``(0, NULL)``, equal to the literal expression spec row for row,
+    at a small and at a large k·dim; a NaN or Inf component raises."""
+    import pytest
+    from similarity_specs import literal_assign
+
+    from ontology_graph_etl_spark.operators.similarity import kmeans_assign
+
+    cents = [[0.0, 1.0], [1.0, 0.0], [0.6, 0.8]]
+    rows = [
+        (0, [1.0, None]),
+        (1, None),
+        (2, [1.0]),
+        (3, [1.0, 0.0, 0.5]),
+        (4, [0.9, 0.1]),
+        (5, [0.1, 0.9]),
+        (6, [0.6, 0.8]),
+        (7, [None, None]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+    got = {
+        r.vec_id: (r.centroid_id, r.sim)
+        for r in kmeans_assign(
+            df, "vec_id", "embedding", centroids=cents
+        ).collect()
+    }
+    spec = {
+        r.vec_id: (r.centroid_id, r.sim)
+        for r in literal_assign(df, "vec_id", "embedding", cents).collect()
+    }
+    assert got == spec
+    assert [got[i] for i in (0, 1, 2, 3, 7)] == [(0, None)] * 5
+    assert got[4][0] == 1 and got[6] == (2, 1.0)
+
+    # past the old 4096-entry literal bound: the same NULL-row answers
+    dim = 64
+    big = [[float((i * 7 + j) % 5) for j in range(dim)] for i in range(65)]
+    wide = spark.createDataFrame(
+        [(0, [1.0] + [None] * (dim - 1)), (1, None), (2, [1.0] * dim)],
+        "vec_id: long, embedding: array<double>",
+    )
+    got = {
+        r.vec_id: (r.centroid_id, r.sim)
+        for r in kmeans_assign(
+            wide, "vec_id", "embedding", centroids=big
+        ).collect()
+    }
+    assert got[0] == (0, None) and got[1] == (0, None)
+    assert got[2][1] is not None
+
+    for bad in (float("nan"), float("inf")):
+        # one partition: a failing job with sibling Python tasks still
+        # running leaves them to be killed while later tests start
+        nan = spark.createDataFrame(
+            [(0, [bad, 0.0])], "vec_id: long, embedding: array<double>"
+        ).coalesce(1)
+        out = kmeans_assign(nan, "vec_id", "embedding", centroids=cents)
+        with pytest.raises(Exception, match="ValueError.*non-finite"):
+            out.collect()
+    with pytest.raises(ValueError, match="non-finite"):
+        kmeans_assign(df, "vec_id", "embedding", centroids=[[1.0, float("inf")]])
 
 
 @given(
@@ -4935,16 +5005,15 @@ def test_round6_half_up_matches_spark_round(spark):
 def test_pq_store_cols_udf_matches_expression_spec(spark, vecs):
     """The Arrow-vectorized PQ store-row encoder (_pq_store_cols_udf,
     used by _pq_rows for every build/merge) is BIT-IDENTICAL to the
-    executable expression spec (_literal_best_expr coarse argmax +
-    _pq_codes_expr codes + the F.aggregate norm fold) — the
+    executable expression spec (tests/similarity_specs.py:
+    literal_best_expr coarse argmax + pq_codes_expr codes + the
+    F.aggregate norm fold) — the
     minhash_signature UDF-vs-expression precedent applied to the PQ
     encode. NULL vectors included: both forms must emit
     (list_id 0, [0]*m codes, NULL norm)."""
-    from ontology_graph_etl_spark.operators.similarity import (
-        _literal_best_expr,
-        _pq_codes_expr,
-        _pq_rows,
-    )
+    from similarity_specs import literal_best_expr, pq_codes_expr
+
+    from ontology_graph_etl_spark.operators.similarity import _pq_rows
 
     dim, m = 8, 2
     seeds = [v for v in vecs if v is not None]
@@ -4959,11 +5028,11 @@ def test_pq_store_cols_udf_matches_expression_spec(spark, vecs):
     rows = [(i, v) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
     vec = F.col("v").cast("array<double>")
-    best = _literal_best_expr(F.col("v"), cents)
+    best = literal_best_expr(F.col("v"), cents)
     spec = df.select(
         F.col("id").alias("vec_id"),
         (-best["neg_cid"]).alias("list_id"),
-        _pq_codes_expr(vec, dim, codebooks).alias("codes"),
+        pq_codes_expr(vec, dim, codebooks).alias("codes"),
         F.sqrt(
             F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x)
         ).alias("norm"),
