@@ -4,15 +4,18 @@ relationship input, ``openpyxl.load_workbook`` + ``iter_rows(values_only
 
 This environment has no openpyxl, and none is needed: ``.xlsx`` is a ZIP
 of SpreadsheetML XML (ECMA-376), readable with stdlib ``zipfile`` +
-``xml.etree``. The parser core works on bytes, which gives two entry
-points sharing one code path:
+``xml.etree``. The parser core works on bytes and parses one sheet at a
+time (:func:`_parse_sheet`); both entry points parse only the sheet
+they are asked for and build their rows with one Arrow column builder:
 
 - :func:`read_sheet_rows` — driver-side read of ONE workbook (the
   reference's shape: a single metadata-driven spreadsheet, thousands of
   rows) → DataFrame with ``line_no`` preserving sheet row order, the
   order column ``extract_relationships``'s prefix-scan semantics need.
+  The rows reach Spark as a ``pyarrow`` table, so the frame is a
+  ``LocalTableScan``, not a Python-RDD scan.
 - :func:`read_sheets_distributed` — the 100 TB shape for MANY workbooks:
-  ``spark.read.format("binaryFile")`` → ``mapInPandas`` parsing each
+  ``spark.read.format("binaryFile")`` → ``mapInArrow`` parsing each
   file on executors. One task per file, no driver bottleneck; column
   width comes from the caller's sheet config (the same ordinal-driven
   contract the reference uses), so the schema is fixed up front.
@@ -38,6 +41,7 @@ from collections.abc import Iterator
 from io import BytesIO
 from xml.etree import ElementTree
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -121,42 +125,48 @@ def _cell_value(cell, shared: list[str]):
     return _parse_number(v.text)
 
 
-def parse_workbook(data: bytes) -> dict[str, list[list]]:
-    """bytes of one .xlsx -> {sheet_name: rows}; each row is a list of
+def _parse_sheet(xml: bytes, shared: list[str]) -> list[list]:
+    """One worksheet part's XML -> its rows, each a list of
     (None | bool | int | float | str) padded to the sheet's max used
     column, rows in sheet order with gaps (fully empty rows) preserved
     as all-None rows — exactly ``iter_rows(values_only=True)``."""
+    root = ElementTree.fromstring(xml)
+    rows: dict[int, dict[int, object]] = {}
+    max_col = -1
+    max_row = 0
+    for rnum, row_el in enumerate(root.iter(f"{_NS}row"), start=1):
+        r = int(row_el.get("r", rnum))
+        cells: dict[int, object] = {}
+        next_col = 0
+        for cell in row_el:
+            if cell.tag != f"{_NS}c":
+                continue
+            col = _col_index(cell.get("r", ""))
+            if col is None:  # no ref attr: cells are sequential
+                col = next_col
+            next_col = col + 1
+            val = _cell_value(cell, shared)
+            if val is not None:
+                cells[col] = val
+                max_col = max(max_col, col)
+        rows[r] = cells
+        max_row = max(max_row, r)
+    width = max_col + 1
+    return [
+        [rows.get(r, {}).get(c) for c in range(width)]
+        for r in range(1, max_row + 1)
+    ]
+
+
+def parse_workbook(data: bytes) -> dict[str, list[list]]:
+    """bytes of one .xlsx -> {sheet_name: rows}, rows as
+    :func:`_parse_sheet` gives them."""
     zf = zipfile.ZipFile(BytesIO(data))
     shared = _shared_strings(zf)
-    out: dict[str, list[list]] = {}
-    for name, member in _sheet_paths(zf):
-        root = ElementTree.fromstring(zf.read(member))
-        rows: dict[int, dict[int, object]] = {}
-        max_col = -1
-        max_row = 0
-        for rnum, row_el in enumerate(root.iter(f"{_NS}row"), start=1):
-            r = int(row_el.get("r", rnum))
-            cells: dict[int, object] = {}
-            next_col = 0
-            for cell in row_el:
-                if cell.tag != f"{_NS}c":
-                    continue
-                col = _col_index(cell.get("r", ""))
-                if col is None:  # no ref attr: cells are sequential
-                    col = next_col
-                next_col = col + 1
-                val = _cell_value(cell, shared)
-                if val is not None:
-                    cells[col] = val
-                    max_col = max(max_col, col)
-            rows[r] = cells
-            max_row = max(max_row, r)
-        width = max_col + 1
-        out[name] = [
-            [rows.get(r, {}).get(c) for c in range(width)]
-            for r in range(1, max_row + 1)
-        ]
-    return out
+    return {
+        name: _parse_sheet(zf.read(member), shared)
+        for name, member in _sheet_paths(zf)
+    }
 
 
 def sheet_names(path: str) -> list[str]:
@@ -181,6 +191,34 @@ def _row_schema(n_cols: int) -> StructType:
     )
 
 
+def _sheet_member(zf: zipfile.ZipFile, sheet: int | str) -> str:
+    """Zip member of one sheet, by name or by position in workbook
+    order: ``KeyError`` for an unknown name, ``IndexError`` for a
+    position out of range."""
+    members = dict(_sheet_paths(zf))
+    if isinstance(sheet, str):
+        if sheet not in members:
+            raise KeyError(f"sheet {sheet!r} not in {sorted(members)}")
+        return members[sheet]
+    return list(members.values())[sheet]
+
+
+def _rows_table(rows: list[list], width: int, header: bool) -> pa.Table:
+    """Sheet rows -> the :func:`_row_schema` columns as Arrow:
+    ``line_no`` is the 1-based sheet row (row 1 dropped under
+    ``header``), ``c0..c{width-1}`` the :func:`_stringify`-ed cells,
+    NULL past the end of a shorter row."""
+    start = 1 if header else 0
+    body = rows[start:]
+    cols = {"line_no": pa.array(range(start + 1, len(rows) + 1), pa.int64())}
+    for c in range(width):
+        cols[f"c{c}"] = pa.array(
+            [_stringify(r[c]) if c < len(r) else None for r in body],
+            pa.string(),
+        )
+    return pa.table(cols)
+
+
 def read_sheet_rows(
     spark: SparkSession,
     path: str,
@@ -196,34 +234,27 @@ def read_sheet_rows(
     ``line_no`` is the 1-based sheet row number; with ``header=True``
     row 1 is dropped (P6 header skip, reference main.py:287-289) but
     numbering is preserved so order semantics (S5 stop-at-first-empty-
-    key) survive. Driver-side is the right scale call for ONE workbook —
-    xlsx is not a big-data format; a single sheet caps at ~1M rows by
-    spec. For many workbooks use :func:`read_sheets_distributed`.
+    key) survive. ``sheet`` is a name or a position in workbook order.
+
+    Only the requested sheet's XML is parsed. The rows go to Spark as
+    a ``pyarrow`` table, so the frame plans as a ``LocalTableScan``
+    (empty sheets included): later jobs over it start no Python
+    workers, where a list of tuples would plan as a Python-RDD scan
+    (``Scan ExistingRDD``). Driver-side is the right scale call for ONE
+    workbook — xlsx is not a big-data format; a single sheet caps at
+    ~1M rows by spec. For many workbooks use
+    :func:`read_sheets_distributed`.
     """
-    with open(path, "rb") as f:
-        book = parse_workbook(f.read())
-    if isinstance(sheet, str):
-        if sheet not in book:
-            raise KeyError(f"sheet {sheet!r} not in {sorted(book)}")
-        rows = book[sheet]
-    else:
-        rows = list(book.values())[sheet]
+    with zipfile.ZipFile(path) as zf:
+        rows = _parse_sheet(
+            zf.read(_sheet_member(zf, sheet)), _shared_strings(zf)
+        )
     width = n_cols if n_cols is not None else max(
         (len(r) for r in rows), default=0
     )
-    start = 1 if header else 0
-    data = [
-        tuple(
-            [i]
-            + [
-                _stringify(r[c]) if c < len(r) else None
-                for c in range(width)
-            ]
-        )
-        for i, r in enumerate(rows, start=1)
-        if i > start
-    ]
-    return spark.createDataFrame(data, _row_schema(width))
+    return spark.createDataFrame(
+        _rows_table(rows, width, header), _row_schema(width)
+    )
 
 
 def read_sheets_distributed(
@@ -234,51 +265,42 @@ def read_sheets_distributed(
     header: bool = True,
 ) -> DataFrame:
     """Executor-side parse of MANY workbooks: ``binaryFile`` scan (one
-    row per file: path + content bytes) → ``mapInPandas`` running
-    :func:`parse_workbook` per file. Embarrassingly parallel — one task
+    row per file: path + content bytes) → ``mapInArrow`` parsing the
+    requested sheet of each file into the same Arrow columns as
+    :func:`read_sheet_rows`. Embarrassingly parallel — one task
     per workbook, no shuffle, no driver state; at fleet scale the only
     knob is file listing parallelism. ``n_cols`` fixes the schema up
     front (the caller's sheet config knows its max ordinal — the same
     config-driven contract as the reference's worksheet_metadata).
+    A workbook without the requested sheet contributes no rows.
 
     Output adds ``src_file`` so per-file order semantics (prefix scan)
     can partition by file.
     """
-    import pandas as pd
-
     schema = StructType(
         [StructField("src_file", StringType(), False)]
         + _row_schema(n_cols).fields
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for _, file_row in batch.iterrows():
-                book = parse_workbook(bytes(file_row["content"]))
-                if isinstance(sheet, str):
-                    rows = book.get(sheet, [])
-                else:
-                    all_sheets = list(book.values())
-                    rows = all_sheets[sheet] if sheet < len(all_sheets) else []
-                start = 1 if header else 0
-                recs = {
-                    "src_file": [],
-                    "line_no": [],
-                    **{f"c{c}": [] for c in range(n_cols)},
-                }
-                for i, r in enumerate(rows, start=1):
-                    if i <= start:
+            files = zip(
+                batch.column("path").to_pylist(),
+                batch.column("content").to_pylist(),
+            )
+            for src, content in files:
+                with zipfile.ZipFile(BytesIO(content)) as zf:
+                    try:
+                        member = _sheet_member(zf, sheet)
+                    except (KeyError, IndexError):
                         continue
-                    recs["src_file"].append(file_row["path"])
-                    recs["line_no"].append(i)
-                    for c in range(n_cols):
-                        recs[f"c{c}"].append(
-                            _stringify(r[c]) if c < len(r) else None
-                        )
-                yield pd.DataFrame(recs, columns=list(recs))
+                    rows = _parse_sheet(zf.read(member), _shared_strings(zf))
+                table = _rows_table(rows, n_cols, header)
+                src_col = pa.array([src] * table.num_rows, pa.string())
+                yield from table.add_column(0, "src_file", src_col).to_batches()
 
     files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(parse, schema=schema)
+    return files.mapInArrow(parse, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -127,7 +127,15 @@ def stream_session_counts(
 ) -> DataFrame:
     """Streaming-native session windows: ``F.session_window`` with a
     watermark bounds state (late events beyond the watermark are dropped —
-    the deliberate trade for bounded state at 100 TB/day)."""
+    the deliberate trade for bounded state at 100 TB/day).
+
+    Filter the result only after materializing it (``collect``,
+    ``localCheckpoint`` or a sink). On a batch frame Spark pushes a
+    predicate on ``session_end`` below the session merge, so it filters
+    the per-event windows, not the merged sessions: for one user's
+    events at minutes 0, 20, 40, 60 and 80, ``.where(session_end >
+    01:40)`` returns 01:20–01:50 with n=1 instead of the one session
+    00:00–01:50 with n=5 (pinned in tests/test_streaming.py)."""
     events = _event_time_ready(events, ts_col)
     return (
         events.withWatermark(ts_col, watermark)

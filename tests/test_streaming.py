@@ -99,6 +99,29 @@ def test_session_window_stream_runs(spark, events_stream):
     assert set(got.columns) == {"session_start", "session_end", "user_id", "n_events"}
 
 
+def test_session_window_merges_then_filters_after_materializing(spark):
+    """stream_session_counts on a batch frame merges one user's events
+    at minutes 0/20/40/60/80 (30-minute gap) into ONE session,
+    00:00-01:50 with n=5, and a session_end filter applied after
+    materializing keeps that session. The same filter on the lazy
+    frame would be pushed below the session merge (see the
+    stream_session_counts docstring)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    events = spark.createDataFrame(
+        [(7, t0 + dt.timedelta(minutes=m)) for m in (0, 20, 40, 60, 80)],
+        "user_id int, ts timestamp",
+    ).coalesce(1)
+    sess = windows.stream_session_counts(events, gap="30 minutes")
+    want = [(t0, t0 + dt.timedelta(minutes=110), 7, 5)]
+    assert [tuple(r) for r in sess.collect()] == want
+    late = sess.localCheckpoint().where(
+        F.col("session_end") > F.lit(t0 + dt.timedelta(minutes=100))
+    )
+    assert [tuple(r) for r in late.collect()] == want
+
+
 def test_sessionize_matches_session_window_semantics(spark, events_batch):
     """The two session implementations agree on bounded data: same number
     of sessions per user (gaps-and-islands vs F.session_window)."""
@@ -1334,6 +1357,51 @@ def test_frozen_ccnet_store_matches_train_on_self(spark, sf_dir, tmp_path):
 
     with _pytest.raises(ValueError, match="langs"):
         gatestats.build_ccnet_store(ref, store + "2")
+
+
+def test_ccnet_build_counts_equal_store_read(spark, tmp_path):
+    """build_ccnet_store scores its reference under the count table it
+    just wrote, passed as counts= instead of re-read from the store.
+    Scoring the same docs with counts= and with the store read
+    (recursive scan + group-sum) must give equal scores, or the stored
+    cutoffs would drift from what re-scoring the store returns."""
+    from ontology_graph_etl_spark.operators import gatestats
+    from ontology_graph_etl_spark.operators.textops import language_id
+
+    ref = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat and the dog ran"),
+            (2, "a dog and a cat are in the house"),
+            (3, "the house is on the hill and it is red"),
+            (4, "zyx qwv plk mnb"),
+            (5, "qwv zyx zyx plk"),
+            (6, "the red hill is far from the house"),
+        ],
+        "doc_id long, text string",
+    ).coalesce(1)
+    langs = ["en", "und"]
+    store = str(tmp_path / "ccnet")
+    gatestats.build_ccnet_store(ref, store, langs=langs, buckets=4)
+    tagged = (
+        language_id(ref, "text")
+        .where(F.col("lang_pred").isin(*langs))
+        .localCheckpoint()
+    )
+    counts = gatestats.build_lm_counts(tagged, "doc_id", "text", "lang_pred")
+    lm = store + "/lm"
+    with_counts = {
+        tuple(r)
+        for r in gatestats.score_with_frozen_lm(
+            spark, lm, tagged, counts=counts
+        ).collect()
+    }
+    from_store = {
+        tuple(r)
+        for r in gatestats.score_with_frozen_lm(spark, lm, tagged).collect()
+    }
+    assert with_counts == from_store
+    assert {r[1] for r in from_store} == {"en", "und"}
+    assert all(r[2] is not None for r in from_store)
 
 
 def test_screen_against_cutoffs_policies(spark, tmp_path):

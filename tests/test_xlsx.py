@@ -13,6 +13,8 @@ from ontology_graph_etl_spark.sources.tabular import (
     extract_relationships,
 )
 from ontology_graph_etl_spark.sources.xlsx import (
+    _row_schema,
+    _stringify,
     parse_workbook,
     read_sheet_rows,
     read_sheets_distributed,
@@ -101,6 +103,105 @@ def test_read_sheet_rows_dataframe(spark, book_path):
     num = read_sheet_rows(spark, book_path, sheet=1, header=False)
     vals = {r["line_no"]: (r["c0"], r["c1"], r["c2"]) for r in num.collect()}
     assert vals[2] == ("1", "2.5", "True")
+
+
+def _read_sheet_rows_spec(spark, path, sheet=0, header=True, n_cols=None):
+    """The value spec for read_sheet_rows: its former construction,
+    a whole-workbook parse and a list of tuples handed to
+    createDataFrame."""
+    with open(path, "rb") as f:
+        book = parse_workbook(f.read())
+    if isinstance(sheet, str):
+        rows = book[sheet]
+    else:
+        rows = list(book.values())[sheet]
+    width = n_cols if n_cols is not None else max(
+        (len(r) for r in rows), default=0
+    )
+    start = 1 if header else 0
+    data = [
+        tuple(
+            [i]
+            + [
+                _stringify(r[c]) if c < len(r) else None
+                for c in range(width)
+            ]
+        )
+        for i, r in enumerate(rows, start=1)
+        if i > start
+    ]
+    return spark.createDataFrame(data, _row_schema(width))
+
+
+@pytest.fixture()
+def mixed_book_path(tmp_path):
+    path = str(tmp_path / "mixed.xlsx")
+    write_xlsx(
+        path,
+        {
+            # column 2 is NULL in every row; the None cells are omitted,
+            # so refs are sparse, and row 3 has no <row> element at all
+            "mixed": [
+                ["name", "n", None, "flag", "x"],
+                ["a", 1, None, True, 1e300],
+                [None, None, None, None, None],
+                ["b", -3, None, False, None],
+                [None, 2.5, None, None, "tail"],
+            ],
+            "header_only": [["h1", "h2"]],
+        },
+    )
+    return path
+
+
+@pytest.mark.parametrize(
+    "sheet,header,n_cols",
+    [
+        ("mixed", True, None),
+        ("mixed", False, None),
+        ("mixed", True, 2),  # narrower than the sheet
+        ("mixed", False, 8),  # wider than the sheet
+        (0, True, None),
+        (-1, True, None),
+        ("header_only", True, None),
+        ("header_only", True, 3),
+        (1, False, None),
+    ],
+)
+def test_read_sheet_rows_matches_list_spec(
+    spark, mixed_book_path, sheet, header, n_cols
+):
+    got = read_sheet_rows(
+        spark, mixed_book_path, sheet=sheet, header=header, n_cols=n_cols
+    )
+    want = _read_sheet_rows_spec(
+        spark, mixed_book_path, sheet=sheet, header=header, n_cols=n_cols
+    )
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_read_sheet_rows_spec_is_not_vacuous(spark, mixed_book_path):
+    rows = read_sheet_rows(spark, mixed_book_path, sheet="mixed").collect()
+    assert [tuple(r) for r in rows] == [
+        (2, "a", "1", None, "True", "1e+300"),
+        (3, None, None, None, None, None),
+        (4, "b", "-3", None, "False", None),
+        (5, None, "2.5", None, None, "tail"),
+    ]
+
+
+@pytest.mark.parametrize("sheet", ["mixed", "header_only"])
+def test_read_sheet_rows_plans_local_table_scan(spark, mixed_book_path, sheet):
+    df = read_sheet_rows(spark, mixed_book_path, sheet=sheet)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_read_sheet_rows_missing_sheet_raises(spark, mixed_book_path):
+    with pytest.raises(KeyError, match="'nope' not in"):
+        read_sheet_rows(spark, mixed_book_path, sheet="nope")
 
 
 def test_sheet_to_relationships_end_to_end(spark, book_path):
@@ -210,3 +311,16 @@ def test_distributed_fleet_of_100_workbooks(spark, tmp_path):
     assert sum(len(v) for v in got.values()) == sum(
         len(v) for v in expect.values()
     )
+
+
+def test_distributed_missing_sheet_gives_no_rows(spark, book_path):
+    """A workbook without the requested sheet (unknown name or position
+    past the last sheet) contributes no rows, not an error."""
+    for sheet in ("nope", 5):
+        df = read_sheets_distributed(spark, book_path, n_cols=2, sheet=sheet)
+        assert df.collect() == []
+    got = read_sheets_distributed(spark, book_path, n_cols=2, sheet=1)
+    assert [(r.line_no, r.c0, r.c1) for r in got.collect()] == [
+        (2, "1", "2.5"),
+        (3, "-3", "1e+300"),
+    ]
