@@ -182,18 +182,23 @@ def closure(
     main.py:81-93): all (node, ancestor) pairs reachable via 1+ hops.
 
     Semi-naive iteration: each round joins only the *frontier* (pairs
-    discovered last round) against the base edges, unions into the
-    accumulated closure, and dedups — the standard datalog evaluation,
-    which does O(depth) shuffles over frontier-sized (not closure-sized)
-    inputs. ``localCheckpoint`` truncates lineage each round so the plan
-    doesn't grow exponentially (SURVEY.md §4 item 1). Terminates at
-    fixpoint; ``max_iterations`` guards cyclic inputs.
+    discovered last round) against the base edges, drops the pairs
+    already known with a left-anti join against the accumulated
+    closure, and dedups — the standard datalog evaluation, O(depth)
+    rounds. The extend join is frontier-sized, but the anti join's
+    other side is the union of every earlier frontier, i.e. the closure
+    so far: each round shuffles it for the join, and AQE then
+    broadcasts it once its size is known. So a round's shuffle grows
+    with the closure, not only with the frontier. ``localCheckpoint``
+    truncates lineage each round so the plan doesn't grow exponentially
+    (SURVEY.md §4 item 1). Terminates at fixpoint; ``max_iterations``
+    guards cyclic inputs.
 
     The base edge list is constant across rounds; when it is small
     (≤ ``_CLOSURE_BROADCAST_EDGES`` rows — known for free after its
     checkpoint) it is broadcast into every extend join, so the frontier
-    is never shuffled for the join — only the anti-join/dedup moves it.
-    Ontology hierarchies are exactly this shape: edges ≈ #concepts,
+    is never shuffled for that join — only the anti-join/dedup moves
+    it. Ontology hierarchies are exactly this shape: edges ≈ #concepts,
     closure ≫ edges.
     """
     # a half-NULL edge is not an edge: drop it whole, matching

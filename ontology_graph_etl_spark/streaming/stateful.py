@@ -1,88 +1,49 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
-(SURVEY.md §2.10 extension surface).
+"""Per-key running state for streaming queries (SURVEY.md §2.10
+extension surface).
 
-``F.session_window`` / windowed aggs cover the declarative cases; this
-module is the escape hatch for *custom* per-key state machines — the
-pattern a 100 TB/day event pipeline needs for sessionization with
-custom emission rules, running counters with timeout flushes, etc.
+``running_totals`` keeps a per-user (count, sum) in Spark's own state
+store: it is a declarative ``groupBy().agg()`` run in update mode, so
+each trigger folds its rows into the stored aggregates and emits the
+keys it touched. No Python worker runs. State lives in the state store
+(HDFS-backed, or RocksDB on a real cluster) and the same transform
+works under ``availableNow`` for bounded tests.
 
-State is per-key in the state store (RocksDB/HDFS-backed on a real
-cluster); timeouts drive eviction so state stays bounded. The same
-transform works under ``availableNow`` for bounded tests.
+The earlier form of this operator, a per-key pandas fold in a Python
+worker, is kept as the executable spec in ``tests/streaming_specs.py``;
+the tests replay files through both and compare every trigger's
+emissions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-RUNNING_TOTALS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("n_events", LongType(), False),
-        StructField("total_value", DoubleType(), True),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType(), False),
-        StructField("total_value", DoubleType(), False),
-    ]
-)
+from pyspark.sql import functions as F
 
 
 def running_totals(
     events: DataFrame,
     user_col: str = "user_id",
     value_col: str = "value",
-    timeout: str = "NoTimeout",
 ) -> DataFrame:
-    """Per-user running totals as an explicit state machine: each
-    micro-batch folds its rows into (count, sum) state and emits the
-    updated row. The custom-operator template — swap the fold and the
-    emission rule for richer semantics (e.g. emit-on-close sessions).
+    """Per-user running totals: ``user_id`` (``user_col`` cast to
+    long), ``n_events`` and ``total_value``. Run with
+    ``outputMode("update")``: each trigger emits one row per key it
+    touched, carrying the cumulative count and sum over every trigger
+    so far. A NULL or NaN value counts as 0.
 
     Batch twin for oracle checks: ``groupBy(user).agg(count, sum)`` —
     at end-of-stream the final emission per key equals the batch result.
+
+    Contract changes from the pandas-fold operator:
+
+    1. A NULL user gives a ``(NULL, n, total)`` row; the fold failed
+       the query (``cannot convert float NaN to integer``).
+    2. The output ``user_id`` is nullable.
+    3. A checkpoint written by the fold cannot be resumed here: the
+       state schema differs.
     """
-
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series([key[0]], dtype="int64"),
-                "n_events": pd.Series([n], dtype="int64"),
-                "total_value": pd.Series([total], dtype="float64"),
-            }
-        )
-
-    return (
-        events.groupBy(user_col)
-        .applyInPandasWithState(
-            fold,
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=getattr(GroupStateTimeout, timeout, GroupStateTimeout.NoTimeout),
-        )
+    value = F.coalesce(F.col(value_col).cast("double"), F.lit(0.0))
+    return events.groupBy(F.col(user_col).cast("long").alias("user_id")).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.nanvl(value, F.lit(0.0))).alias("total_value"),
     )

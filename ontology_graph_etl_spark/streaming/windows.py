@@ -165,8 +165,10 @@ def stream_tumbling_counts(
     stream's max event time are DROPPED rather than mutating an
     already-emitted row — the deliberate bounded-state trade every
     100 TB/day aggregation makes. The drop semantics are pinned
-    end-to-end by tests/test_streaming.py::test_late_events_dropped
-    (two micro-batches, a straggler in the second)."""
+    end-to-end by
+    tests/test_streaming.py::test_late_events_dropped_by_watermark
+    (two micro-batches, a straggler in the second), which is in
+    ``SLOW_SWEEPS`` and runs only with ``SPARK_GRAFT_FULL_TESTS=1``."""
     events = _event_time_ready(events, ts_col)
     return (
         events.withWatermark(ts_col, watermark)

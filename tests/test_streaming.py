@@ -139,8 +139,8 @@ def test_sessionize_matches_session_window_semantics(spark, events_batch):
 
 
 def test_stateful_running_totals_matches_batch(spark, events_batch, events_stream):
-    """applyInPandasWithState custom operator: the last emitted state per
-    user at end-of-stream equals the batch groupBy aggregate."""
+    """Update-mode running totals: the last emitted state per user at
+    end-of-stream equals the batch groupBy aggregate."""
     from ontology_graph_etl_spark.streaming.stateful import running_totals
 
     out = running_totals(events_stream.where(F.col("user_id").isNotNull()))
@@ -177,6 +177,114 @@ def test_stateful_running_totals_matches_batch(spark, events_batch, events_strea
     )
     assert final.exceptAll(want).count() == 0
     assert want.exceptAll(final).count() == 0
+
+
+def _write_event_files(src, files):
+    """One parquet file per ``(user_id, value)`` row list, modification
+    times one second apart so the file source reads them in order."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src)
+    base = time.time() - 10 * len(files)
+    for k, rows in enumerate(files):
+        users, values = zip(*rows)
+        path = os.path.join(src, f"part-{k}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": pa.array(users, pa.int64()),
+                    "value": pa.array(values, pa.float64()),
+                }
+            ),
+            path,
+        )
+        os.utime(path, (base + k, base + k))
+
+
+def _replay_per_trigger(spark, op, src, ckpt):
+    """Run ``op`` over ``src`` one file per trigger in update mode and
+    return each trigger's emitted rows, sorted, and the finished
+    query."""
+    emitted = []
+    events = (
+        spark.readStream.schema("user_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        op(events)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(
+            lambda df, _id: emitted.append(sorted(map(tuple, df.collect()), key=repr))
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None, q.exception()
+    return emitted, q
+
+
+def test_running_totals_matches_fold_spec_per_trigger(spark, tmp_path):
+    """The native aggregation and the pandas fold spec emit the same
+    rows on every trigger: user 1 (NULL value) and user 2 (NaN value)
+    appear in both files, and their cumulative totals carry over; user
+    5's only value is NULL."""
+    import math
+
+    from streaming_specs import running_totals_spec
+
+    from ontology_graph_etl_spark.streaming.stateful import running_totals
+
+    src = str(tmp_path / "in")
+    _write_event_files(
+        src,
+        [
+            [(1, 1.5), (1, None), (2, float("nan")), (3, 2.25)],
+            [(1, 4.0), (2, 0.5), (2, None), (4, float("nan")), (5, None)],
+        ],
+    )
+    got, _ = _replay_per_trigger(spark, running_totals, src, str(tmp_path / "a"))
+    want, _ = _replay_per_trigger(
+        spark, running_totals_spec, src, str(tmp_path / "b")
+    )
+    assert want == [
+        [(1, 2, 1.5), (2, 1, 0.0), (3, 1, 2.25)],
+        [(1, 3, 5.5), (2, 3, 0.5), (4, 1, 0.0), (5, 1, 0.0)],
+    ]
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert [r[:2] for r in g] == [r[:2] for r in w]
+        assert all(math.isclose(a[2], b[2]) for a, b in zip(g, w))
+
+
+def test_running_totals_null_user_gives_null_key_row(spark, tmp_path):
+    """A NULL user is one more key: it gets a ``(NULL, n, total)`` row
+    and the query does not fail (the pandas fold failed it)."""
+    from ontology_graph_etl_spark.streaming.stateful import running_totals
+
+    src = str(tmp_path / "in")
+    _write_event_files(src, [[(None, 2.0), (None, 1.0), (7, 3.0)]])
+    got, _ = _replay_per_trigger(spark, running_totals, src, str(tmp_path / "ck"))
+    assert got == [[(7, 1, 3.0), (None, 2, 3.0)]]
+
+
+def test_running_totals_plans_state_store_without_python(spark, tmp_path):
+    """The running totals run on Spark's state store: the executed plan
+    holds ``StateStoreSave`` and no Python node."""
+    from ontology_graph_etl_spark.streaming.stateful import running_totals
+
+    src = str(tmp_path / "in")
+    _write_event_files(src, [[(1, 1.0)]])
+    _, q = _replay_per_trigger(spark, running_totals, src, str(tmp_path / "ck"))
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "Python" not in plan
 
 
 def _run_stream_to_memory_append(spark, stream_df, name: str):
